@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.text.Bm25
 
@@ -49,13 +50,14 @@ import graft.text.Bm25
   *
   * The COMBINED family collapses even the two-leg pipeline's serial job
   * rounds: [[buildCombined]] co-locates each partition's postings CSR,
-  * decay factors and bucket-major IVF vector blocks (int8 twin:
-  * [[buildCombinedInt8]], 4× less resident memory), and
-  * [[fusedTopKCombined]] / [[fusedTopKCombinedInt8]] /
+  * decay factors and bucket-major IVF vector blocks (f32, or int8 via
+  * [[buildCombinedInt8]] with 4× less resident memory — one code path,
+  * generic over a [[VecCodec]]), and [[fusedTopKCombined]] /
   * [[mmrTopKCombined]] serve a whole hybrid (or MMR-diversified) query
   * batch as ONE Spark job over driver-resident queries — the
   * architecture's latency floor (one job launch, ~30 ms at local[32]),
-  * every path spec-pinned bit-identical to its multi-job twin.
+  * every path spec-pinned bit-identical to its multi-job counterpart
+  * (the [[Ivf]] serving kernels, kept separate as the reference).
   */
 object ServingFusion {
 
@@ -109,30 +111,14 @@ object ServingFusion {
       .join(wp.select(col(idCol).cast("long").as("_id"), col("token"),
         col("w").cast("double").as("w")), Seq("_id"), "left")
     docMajor(joined, numShards).rdd.mapPartitions { it =>
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val decB = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val b = new ShardBuilder[Nothing]
       val idIdx = scala.collection.mutable.LongMap.empty[Int]
-      val byTok = new java.util.HashMap[String,
-        (scala.collection.mutable.ArrayBuilder.ofInt,
-         scala.collection.mutable.ArrayBuilder.ofDouble)]()
       it.foreach { r =>
-        val id = r.getLong(0)
-        val li = idIdx.getOrElseUpdate(id, {
-          ids += id; decB += r.getDouble(1); ids.length - 1
-        })
-        if (!r.isNullAt(2)) {
-          var e = byTok.get(r.getString(2))
-          if (e == null) {
-            e = (new scala.collection.mutable.ArrayBuilder.ofInt,
-              new scala.collection.mutable.ArrayBuilder.ofDouble)
-            byTok.put(r.getString(2), e)
-          }
-          e._1 += li
-          e._2 += r.getDouble(3)
-        }
+        val li = idIdx.getOrElseUpdate(r.getLong(0),
+          b.addDoc(r.getLong(0), r.getDouble(1)))
+        if (!r.isNullAt(2)) b.addPost(r.getString(2), li, r.getDouble(3))
       }
-      if (ids.isEmpty) Iterator.empty
-      else Iterator.single(finishShard(ids.toArray, decB.toArray, byTok))
+      if (b.ids.isEmpty) Iterator.empty else Iterator.single(b.text())
     }
   }
 
@@ -166,125 +152,111 @@ object ServingFusion {
     if (numShards > 0) joined.repartition(numShards, col("_id"))
     else joined.repartition(col("_id"))
 
-  /** Assemble a [[Shard]]'s token-CSR arrays from the per-token builders a
-    * partition pass accumulated — shared by [[buildShards]] (per-posting
-    * rows) and [[buildCombined]] (per-doc aggregated posting lists).
+  /** One partition's doc-major build state — docs with their decay
+    * factors, per-token posting builders and, for the combined layouts,
+    * encoded vector rows grouped by IVF bucket. Every shard producer fills
+    * one: [[buildShards]] (per-posting rows), [[buildCombinedOf]] and
+    * [[loadCombinedOf]] (per-doc rows) and [[compactCombinedOf]] (the
+    * surviving docs of resident shards), so the layout logic exists once.
     */
-  /** Finalize a partition's bucket-major f32 vector blocks from the
-    * per-bucket (local-doc builder, row buffer) accumulators — the ONE
-    * copy of the (buckets sorted ascending, CSR offsets, row copy) layout
-    * logic, shared by [[assembleF32]] and [[compactCombined]] so the
-    * build/load/compact paths cannot drift.
-    * Returns (buckets, bOff, vecLocal, flat, dim).
-    */
-  private def finishVecBlocksF32(
-      byBucket: scala.collection.mutable.LongMap[
-        (scala.collection.mutable.ArrayBuilder.ofInt,
-         scala.collection.mutable.ArrayBuffer[Array[Float]])])
-      : (Array[Long], Array[Int], Array[Int], Array[Float], Int) = {
-    val bs = byBucket.keys.toArray.sorted
-    val locals = bs.map(b => byBucket(b)._1.result())
-    val rows = bs.map(b => byBucket(b)._2)
-    val nVec = locals.map(_.length).sum
-    val dim = rows.collectFirst {
-      case v if v.nonEmpty => v(0).length
-    }.getOrElse(0)
-    val bOff = new Array[Int](bs.length + 1)
-    val vecLocal = new Array[Int](nVec)
-    val flat = new Array[Float](nVec * dim)
-    var b = 0
-    var off = 0
-    while (b < bs.length) {
-      bOff(b) = off
-      System.arraycopy(locals(b), 0, vecLocal, off, locals(b).length)
-      var r = 0
-      while (r < rows(b).length) {
-        System.arraycopy(rows(b)(r), 0, flat, (off + r) * dim, dim)
-        r += 1
-      }
-      off += locals(b).length
-      b += 1
-    }
-    bOff(bs.length) = off
-    (bs, bOff, vecLocal, flat, dim)
-  }
+  private final class ShardBuilder[R] {
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val decB = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val byTok = new java.util.HashMap[String,
+      (scala.collection.mutable.ArrayBuilder.ofInt,
+       scala.collection.mutable.ArrayBuilder.ofDouble)]()
+    val byBucket = scala.collection.mutable.LongMap
+      .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
+              scala.collection.mutable.ArrayBuffer[R])]
 
-  /** [[finishVecBlocksF32]]'s int8 twin over (codes row, stored norm)
-    * buffers — shared by [[buildCombinedInt8]] (which pairs each
-    * quantized row with [[Ivf.int8Norm]] at accumulation),
-    * [[compactCombinedInt8]] and [[loadCombinedInt8]] (which carry
-    * stored norms verbatim).
-    * Returns (buckets, bOff, vecLocal, codes, norms, dim).
-    */
-  private def finishVecBlocksInt8(
-      byBucket: scala.collection.mutable.LongMap[
-        (scala.collection.mutable.ArrayBuilder.ofInt,
-         scala.collection.mutable.ArrayBuffer[(Array[Byte], Float)])])
-      : (Array[Long], Array[Int], Array[Int], Array[Byte], Array[Float], Int) = {
-    val bs = byBucket.keys.toArray.sorted
-    val locals = bs.map(b => byBucket(b)._1.result())
-    val rows = bs.map(b => byBucket(b)._2)
-    val nVec = locals.map(_.length).sum
-    val dim = rows.collectFirst {
-      case v if v.nonEmpty => v(0)._1.length
-    }.getOrElse(0)
-    val bOff = new Array[Int](bs.length + 1)
-    val vecLocal = new Array[Int](nVec)
-    val codes = new Array[Byte](nVec * dim)
-    val norms = new Array[Float](nVec)
-    var b = 0
-    var off = 0
-    while (b < bs.length) {
-      bOff(b) = off
-      System.arraycopy(locals(b), 0, vecLocal, off, locals(b).length)
-      var r = 0
-      while (r < rows(b).length) {
-        System.arraycopy(rows(b)(r)._1, 0, codes, (off + r) * dim, dim)
-        norms(off + r) = rows(b)(r)._2
-        r += 1
-      }
-      off += locals(b).length
-      b += 1
+    /** Appends a doc; returns its local index. */
+    def addDoc(id: Long, dec: Double): Int = {
+      ids += id; decB += dec; ids.length - 1
     }
-    bOff(bs.length) = off
-    (bs, bOff, vecLocal, codes, norms, dim)
-  }
 
-  private def finishShard(
-      ids: Array[Long],
-      dec: Array[Double],
-      byTok: java.util.HashMap[String,
-        (scala.collection.mutable.ArrayBuilder.ofInt,
-         scala.collection.mutable.ArrayBuilder.ofDouble)]): Shard = {
-    val nTok = byTok.size
-    val toks = new Array[String](nTok)
-    val slotEntries = new Array[(Array[Int], Array[Double])](nTok)
-    val eIt = byTok.entrySet().iterator()
-    var s = 0
-    while (eIt.hasNext) {
-      val e = eIt.next()
-      toks(s) = e.getKey
-      slotEntries(s) = (e.getValue._1.result(), e.getValue._2.result())
-      s += 1
+    /** The (local docs, weights) posting builder of `token`. */
+    def slot(token: String): (scala.collection.mutable.ArrayBuilder.ofInt,
+        scala.collection.mutable.ArrayBuilder.ofDouble) = {
+      var e = byTok.get(token)
+      if (e == null) {
+        e = (new scala.collection.mutable.ArrayBuilder.ofInt,
+          new scala.collection.mutable.ArrayBuilder.ofDouble)
+        byTok.put(token, e)
+      }
+      e
     }
-    val offsets = new Array[Int](nTok + 1)
-    var total = 0
-    s = 0
-    while (s < nTok) {
-      offsets(s) = total; total += slotEntries(s)._1.length; s += 1
+
+    def addPost(token: String, li: Int, w: Double): Unit = {
+      val e = slot(token)
+      e._1 += li
+      e._2 += w
     }
-    offsets(nTok) = total
-    val docIx = new Array[Int](total)
-    val w = new Array[Double](total)
-    s = 0
-    while (s < nTok) {
-      System.arraycopy(slotEntries(s)._1, 0, docIx, offsets(s),
-        slotEntries(s)._1.length)
-      System.arraycopy(slotEntries(s)._2, 0, w, offsets(s),
-        slotEntries(s)._2.length)
-      s += 1
+
+    def addVec(bucket: Long, li: Int, row: R): Unit = {
+      val e = byBucket.getOrElseUpdate(bucket,
+        (new scala.collection.mutable.ArrayBuilder.ofInt,
+         scala.collection.mutable.ArrayBuffer.empty[R]))
+      e._1 += li
+      e._2 += row
     }
-    Shard(ids, dec, toks, offsets, docIx, w)
+
+    /** The token-CSR [[Shard]] over the docs and postings added so far. */
+    def text(): Shard = {
+      val nTok = byTok.size
+      val toks = new Array[String](nTok)
+      val slotEntries = new Array[(Array[Int], Array[Double])](nTok)
+      val eIt = byTok.entrySet().iterator()
+      var s = 0
+      while (eIt.hasNext) {
+        val e = eIt.next()
+        toks(s) = e.getKey
+        slotEntries(s) = (e.getValue._1.result(), e.getValue._2.result())
+        s += 1
+      }
+      val offsets = new Array[Int](nTok + 1)
+      var total = 0
+      s = 0
+      while (s < nTok) {
+        offsets(s) = total; total += slotEntries(s)._1.length; s += 1
+      }
+      offsets(nTok) = total
+      val docIx = new Array[Int](total)
+      val w = new Array[Double](total)
+      s = 0
+      while (s < nTok) {
+        System.arraycopy(slotEntries(s)._1, 0, docIx, offsets(s),
+          slotEntries(s)._1.length)
+        System.arraycopy(slotEntries(s)._2, 0, w, offsets(s),
+          slotEntries(s)._2.length)
+        s += 1
+      }
+      Shard(ids.toArray, decB.toArray, toks, offsets, docIx, w)
+    }
+
+    /** The partition's combined shard, or nothing when no doc was added:
+      * the text shard plus bucket-major vector blocks — buckets sorted
+      * ascending (a deterministic layout; scan results don't depend on it,
+      * the (distance, id) total order handles ties), CSR offsets over the
+      * rows, rows packed by the codec.
+      */
+    def finish[B, Q](codec: VecCodec[B, R, Q]): Iterator[CombinedShardOf[B]] =
+      if (ids.isEmpty) Iterator.empty
+      else {
+        val bs = byBucket.keys.toArray.sorted
+        val bOff = new Array[Int](bs.length + 1)
+        val vecLocal = new scala.collection.mutable.ArrayBuilder.ofInt
+        val rows = scala.collection.mutable.ArrayBuffer.empty[R]
+        var b = 0
+        while (b < bs.length) {
+          bOff(b) = rows.length
+          vecLocal ++= byBucket(bs(b))._1.result()
+          rows ++= byBucket(bs(b))._2
+          b += 1
+        }
+        bOff(bs.length) = rows.length
+        Iterator.single(CombinedShardOf(text(), bs, bOff, vecLocal.result(),
+          codec.pack(rows)))
+      }
   }
 
   /** Score one query's tokens into a shard's epoch-tagged accumulators —
@@ -562,20 +534,19 @@ object ServingFusion {
 
   /** A [[Shard]] plus the SAME partition's vectors laid out bucket-major:
     * `buckets(b)` owns vector rows `[bOff(b), bOff(b+1))`; row `r` is the
-    * local doc `vecLocal(r)` (an index into `text.ids`/`text.dec`) with
-    * its floats at `flat(r*dim, (r+1)*dim)`. Doc-major partitioning means
-    * a doc's postings, decay factor AND vector live in ONE partition — the
-    * layout a search-engine shard uses, and what lets a fused hybrid query
-    * run both legs plus hydration in a single executor pass
-    * ([[fusedTopKCombined]]).
+    * local doc `vecLocal(r)` (an index into `text.ids`/`text.dec`), its
+    * vector held in `vecs`, a [[F32Block]] or [[Int8Block]]. Doc-major
+    * partitioning means a doc's postings, decay factor AND vector live in
+    * ONE partition — the layout a search-engine shard uses, and what lets
+    * a fused hybrid query run both legs plus hydration in a single
+    * executor pass ([[fusedTopKCombined]]).
     */
-  final case class CombinedShard(
+  final case class CombinedShardOf[B](
       text: Shard,
       buckets: Array[Long],
       bOff: Array[Int],
       vecLocal: Array[Int],
-      flat: Array[Float],
-      dim: Int) {
+      vecs: B) {
 
     @transient lazy val bucketBlock: scala.collection.mutable.LongMap[Int] = {
       val m = scala.collection.mutable.LongMap.empty[Int]
@@ -583,6 +554,18 @@ object ServingFusion {
       while (i < buckets.length) { m.update(buckets(i), i); i += 1 }
       m
     }
+  }
+
+  /** The f32 combined shard. */
+  type CombinedShard = CombinedShardOf[F32Block]
+
+  /** The COMPRESSED combined shard: int8 vector blocks, 4× less resident
+    * vector memory, same doc-major text/decay co-location.
+    */
+  type CombinedShardInt8 = CombinedShardOf[Int8Block]
+
+  /** f32 vector rows: row `r`'s floats at `flat(r*dim, (r+1)*dim)`. */
+  final case class F32Block(flat: Array[Float], dim: Int) {
 
     /** Per-row ‖x‖² for the L2 path, float-accumulated exactly like
       * [[Ivf.searchBatchedFast]]'s per-block scratch so L2 distances stay
@@ -605,26 +588,180 @@ object ServingFusion {
     }
   }
 
-  /** The COMPRESSED combined shard — [[CombinedShard]] with the vector
-    * blocks stored as int8 codes + precomputed norms ([[Ivf.quantizeArray]]
-    * / [[Ivf.int8Norm]], the reference's `DB.Compress` mode): 4× less
-    * resident vector memory, same doc-major text/decay co-location. Row
-    * `r`'s codes sit at `codes(r*dim, (r+1)*dim)` with norm `norms(r)`.
+  /** int8 vector rows ([[Ivf.quantizeArray]] / [[Ivf.int8Norm]], the
+    * reference's `DB.Compress` mode): row `r`'s codes at
+    * `codes(r*dim, (r+1)*dim)`, its norm at `norms(r)`.
     */
-  final case class CombinedShardInt8(
-      text: Shard,
-      buckets: Array[Long],
-      bOff: Array[Int],
-      vecLocal: Array[Int],
-      codes: Array[Byte],
-      norms: Array[Float],
-      dim: Int) {
+  final case class Int8Block(codes: Array[Byte], norms: Array[Float], dim: Int)
 
-    @transient lazy val bucketBlock: scala.collection.mutable.LongMap[Int] = {
-      val m = scala.collection.mutable.LongMap.empty[Int]
-      var i = 0
-      while (i < buckets.length) { m.update(buckets(i), i); i += 1 }
-      m
+  /** One query prepared for the f32 kernel; `sq` = ‖q‖² on the l2 path. */
+  private[graft] final case class F32Query(v: Array[Float], l2: Boolean,
+      sq: Double)
+
+  /** One query prepared for the int8 kernel: its codes and their norm. */
+  private[graft] final case class Int8Query(codes: Array[Byte], norm: Double)
+
+  /** What the f32 and int8 combined layouts do differently, and nothing
+    * else: row encoding, the block layout `B` (one encoded row is an `R`),
+    * query preparation (`Q`) and the per-row distance kernel, the
+    * persisted doc-row columns and meta scalars, and the MMR pool payload.
+    * Assembly, append, compaction, persistence and both one-job serving
+    * scans exist once, generic over the codec. The shared scans make one
+    * [[dist]] call per candidate row — two implementations, so the call
+    * site stays bimorphic and inlinable when f32 and int8 batches
+    * alternate — and each `dim` loop runs over primitive arrays.
+    */
+  private[graft] sealed abstract class VecCodec[B, R, Q] extends Serializable {
+    /** A normalized build vector, encoded. */
+    def encode(v: Array[Float]): R
+    /** A persisted doc row's vector, from its [[docFields]] cells starting
+      * at column `at` — stored values verbatim, never re-encoded.
+      */
+    def stored(row: org.apache.spark.sql.Row, at: Int): R
+    /** The [[docFields]] cells of one row, the inverse of [[stored]]. */
+    def cells(r: R): Seq[Any]
+    /** The persisted doc rows' vector columns. */
+    def docFields: Seq[StructField]
+    /** The `meta/` scalars a restore needs besides the frozen corpus stats. */
+    def meta: Seq[(String, Double)]
+    /** `rows`, in order, as one block (`dim` 0 when there are none). */
+    def pack(rows: scala.collection.IndexedSeq[R]): B
+    /** Row `r` of `b`, copied. */
+    def row(b: B, r: Int): R
+    /** Queries for [[dist]], once per batch on the driver; `metric` picks
+      * f32's kernel (int8 is cosine-only).
+      */
+    def prepare(qvecs: Array[Array[Float]], metric: String): Array[Q]
+    /** The ANN distance of row `r` of `b` to `q`. */
+    def dist(b: B, r: Int, q: Q): Double
+    /** Row `r`'s MMR pool payload, copied only for accepted candidates. */
+    def poolRow(b: B, r: Int): AnyRef
+    /** The vector the greedy MMR chain compares, from a pool payload. */
+    def poolVec(p: AnyRef): Array[Float]
+  }
+
+  /** The f32 codec: rows stored as given; cosine = `1 − dot` over
+    * pre-normalized vectors, l2 = squared euclidean via
+    * `‖x‖² − 2x·q + ‖q‖²` — the metric contract and float accumulation of
+    * [[Ivf.searchBatchedFast]], so the vector leg is bit-identical to the
+    * two-leg pipeline's.
+    */
+  private[graft] object F32Codec
+      extends VecCodec[F32Block, Array[Float], F32Query] {
+    def encode(v: Array[Float]): Array[Float] = v
+    def stored(row: org.apache.spark.sql.Row, at: Int): Array[Float] =
+      row.getSeq[Float](at).toArray
+    def cells(r: Array[Float]): Seq[Any] = Seq(r)
+    def docFields: Seq[StructField] = Seq(StructField("_vec",
+      ArrayType(FloatType, containsNull = false), nullable = true))
+    def meta: Seq[(String, Double)] = Nil
+    def pack(rows: scala.collection.IndexedSeq[Array[Float]]): F32Block = {
+      val d = if (rows.isEmpty) 0 else rows(0).length
+      val flat = new Array[Float](rows.length * d)
+      var r = 0
+      while (r < rows.length) {
+        System.arraycopy(rows(r), 0, flat, r * d, d)
+        r += 1
+      }
+      F32Block(flat, d)
+    }
+    def row(b: F32Block, r: Int): Array[Float] =
+      java.util.Arrays.copyOfRange(b.flat, r * b.dim, (r + 1) * b.dim)
+    def prepare(qvecs: Array[Array[Float]], metric: String): Array[F32Query] =
+      qvecs.map { qv =>
+        var s = 0.0; var j = 0
+        if (metric == "l2")
+          while (j < qv.length) { s += qv(j).toDouble * qv(j); j += 1 }
+        F32Query(qv, metric == "l2", s)
+      }
+    def dist(b: F32Block, r: Int, q: F32Query): Double = {
+      val flat = b.flat
+      val qv = q.v
+      val dim = b.dim
+      val off = r * dim
+      var dot = 0f
+      var j = 0
+      while (j < dim) { dot += flat(off + j) * qv(j); j += 1 }
+      if (q.l2) b.rowSq(r).toDouble - 2.0d * dot + q.sq else 1.0d - dot
+    }
+    def poolRow(b: F32Block, r: Int): AnyRef = row(b, r)
+    def poolVec(p: AnyRef): Array[Float] = p.asInstanceOf[Array[Float]]
+  }
+
+  /** The int8 codec: rows quantized against the index's trained `absMax`
+    * ([[graft.search.Quantizer]]'s protocol), scored with the integer-dot
+    * int8-cosine kernel — per candidate `1 − clamp(dot/(‖x‖·‖q‖))`, zero-
+    * norm sides scoring 1.0, exactly as [[Ivf.searchBatchedFastInt8]]
+    * scores, so the vector leg is bit-identical to the two-leg int8
+    * pipeline. Cosine only, like the reference's int8 mode. `absMax` is a
+    * frozen artifact of the index: encoding rows and preparing queries
+    * read it; stored codes and norms are carried verbatim (load,
+    * compaction, save), never re-quantized.
+    */
+  private[graft] final case class Int8Codec(absMax: Double)
+      extends VecCodec[Int8Block, (Array[Byte], Float), Int8Query] {
+    def encode(v: Array[Float]): (Array[Byte], Float) = {
+      val q = Ivf.quantizeArray(v, absMax)
+      (q, Ivf.int8Norm(q))
+    }
+    def stored(row: org.apache.spark.sql.Row, at: Int): (Array[Byte], Float) =
+      (row.getAs[Array[Byte]](at), row.getFloat(at + 1))
+    def cells(r: (Array[Byte], Float)): Seq[Any] = Seq(r._1, r._2)
+    def docFields: Seq[StructField] = Seq(
+      StructField("_codes", BinaryType, nullable = true),
+      StructField("_norm", FloatType, nullable = true))
+    def meta: Seq[(String, Double)] = Seq("abs_max" -> absMax)
+    def pack(rows: scala.collection.IndexedSeq[(Array[Byte], Float)]): Int8Block = {
+      val d = if (rows.isEmpty) 0 else rows(0)._1.length
+      val codes = new Array[Byte](rows.length * d)
+      val norms = new Array[Float](rows.length)
+      var r = 0
+      while (r < rows.length) {
+        System.arraycopy(rows(r)._1, 0, codes, r * d, d)
+        norms(r) = rows(r)._2
+        r += 1
+      }
+      Int8Block(codes, norms, d)
+    }
+    def row(b: Int8Block, r: Int): (Array[Byte], Float) =
+      (java.util.Arrays.copyOfRange(b.codes, r * b.dim, (r + 1) * b.dim),
+        b.norms(r))
+    def prepare(qvecs: Array[Array[Float]], metric: String): Array[Int8Query] =
+      qvecs.map { qv =>
+        val qc = Ivf.quantizeArray(qv, absMax)
+        Int8Query(qc, Ivf.int8Norm(qc).toDouble)
+      }
+    def dist(b: Int8Block, r: Int, q: Int8Query): Double = {
+      val codes = b.codes
+      val qc = q.codes
+      val dim = b.dim
+      val off = r * dim
+      var dot = 0
+      var j = 0
+      while (j < dim) { dot += codes(off + j).toInt * qc(j).toInt; j += 1 }
+      val norm = b.norms(r)
+      if (norm == 0f || q.norm == 0.0) 1.0
+      else {
+        var sim = dot.toDouble / (norm.toDouble * q.norm)
+        if (sim > 1.0) sim = 1.0
+        if (sim < -1.0) sim = -1.0
+        1.0 - sim
+      }
+    }
+    /** The candidate's CODES — 4× less pool network than f32 vectors. */
+    def poolRow(b: Int8Block, r: Int): AnyRef =
+      java.util.Arrays.copyOfRange(b.codes, r * b.dim, (r + 1) * b.dim)
+    /** Codes mapped to floats: cosine is scale-invariant, so similarity
+      * over raw code values IS the int8-domain cosine (the `absMax/127`
+      * dequantization factor cancels in `dot/(‖a‖·‖b‖)`) — no dequantized
+      * copy is ever materialized.
+      */
+    def poolVec(p: AnyRef): Array[Float] = {
+      val c = p.asInstanceOf[Array[Byte]]
+      val f = new Array[Float](c.length)
+      var j = 0
+      while (j < c.length) { f(j) = c(j).toFloat; j += 1 }
+      f
     }
   }
 
@@ -664,21 +801,8 @@ object ServingFusion {
     }
   }
 
-  /** Build the combined doc-major serving state: ONE repartition by doc id
-    * co-locates each doc's aggregated posting list, decay factor, vector
-    * and IVF bucket, and each partition assembles its [[Shard]] plus
-    * bucket-major vector blocks. Offline, cached like [[buildShards]] /
-    * [[Ivf.servingIndex]] — at cluster scale the combined shard is the
-    * natural persisted layout for a hybrid index (the reference keeps the
-    * HNSW arena, postings and metadata of a collection on one node for
-    * the same reason).
-    *
-    * @param assigned `(idCol, vector, bucket)` — [[Ivf.assignFast]] output
-    *   over NORMALIZED vectors (the serving kernels' cosine contract).
-    *   Docs missing from it (or with a null vector) still text-serve.
-    */
   /** The combined layouts' shared input frame, doc-major partitioned:
-    * one row per doc — `(_id, _dec, _vec, _bucket, _post)` with postings
+    * one row per doc — `(_id, _dec, _bucket, _post, _vec)` with postings
     * aggregated to a list (bounded by doc length) and vector + bucket
     * left-joined, so postings never replicate per-token with the vector
     * payload.
@@ -689,7 +813,7 @@ object ServingFusion {
     * onto it). A doc present in `assigned` but absent from the spine
     * silently disappears from the combined vector leg — where the
     * two-leg path (a separately built [[Ivf.servingIndex]]) would still
-    * return it, breaking the bit-identity the combined twins are
+    * return it, breaking the bit-identity the combined paths are
     * spec-pinned to. The builders assert it cheaply: extra `assigned`
     * rows surviving an anti-join against the spine fail the build loudly
     * instead of serving with silent recall loss.
@@ -703,7 +827,7 @@ object ServingFusion {
       numShards: Int,
       prebuiltDocLengths: Option[DataFrame],
       prebuiltTokenDf: Option[DataFrame],
-      frozenStats: Option[(Long, Double)] = None): DataFrame = {
+      frozenStats: Option[(Long, Double)]): DataFrame = {
     val (wp, decN) = weightedAndDecay(allIds, post, idCol, dec,
       prebuiltDocLengths, prebuiltTokenDf, frozenStats)
     val pAgg = wp.groupBy(col(idCol).cast("long").as("_id"))
@@ -723,9 +847,24 @@ object ServingFusion {
         "the doc spine (the decay frame, or allIds when decay is " +
         "disabled) — the vector leg would silently drop them")
     docMajor(decN.join(vSel, Seq("_id"), "left")
-      .join(pAgg, Seq("_id"), "left"), numShards)
+      .join(pAgg, Seq("_id"), "left")
+      .select(col("_id"), col("_dec"), col("_bucket"), col("_post"),
+        col("_vec")), numShards)
   }
 
+  /** Build the combined doc-major serving state: ONE repartition by doc id
+    * co-locates each doc's aggregated posting list, decay factor, vector
+    * and IVF bucket, and each partition assembles its [[Shard]] plus
+    * bucket-major vector blocks. Offline, cached like [[buildShards]] /
+    * [[Ivf.servingIndex]] — at cluster scale the combined shard is the
+    * natural persisted layout for a hybrid index (the reference keeps the
+    * HNSW arena, postings and metadata of a collection on one node for
+    * the same reason).
+    *
+    * @param assigned `(idCol, vector, bucket)` — [[Ivf.assignFast]] output
+    *   over NORMALIZED vectors (the serving kernels' cosine contract).
+    *   Docs missing from it (or with a null vector) still text-serve.
+    */
   def buildCombined(
       allIds: DataFrame,
       post: DataFrame,
@@ -735,65 +874,12 @@ object ServingFusion {
       numShards: Int = 0,
       prebuiltDocLengths: Option[DataFrame] = None,
       prebuiltTokenDf: Option[DataFrame] = None,
-      frozenStats: Option[(Long, Double)] = None): org.apache.spark.rdd.RDD[CombinedShard] = {
-    combinedRows(allIds, post, idCol, assigned, dec, numShards,
-      prebuiltDocLengths, prebuiltTokenDf, frozenStats).rdd
-      .mapPartitions(assembleF32)
-  }
+      frozenStats: Option[(Long, Double)] = None): org.apache.spark.rdd.RDD[CombinedShard] =
+    buildCombinedOf(F32Codec, allIds, post, idCol, assigned, dec, numShards,
+      prebuiltDocLengths, prebuiltTokenDf, frozenStats)
 
-  /** Assemble one partition of `(_id, _dec, _vec, _bucket, _post)` rows —
-    * the [[combinedRows]] frame, positionally — into one [[CombinedShard]].
-    * Shared by [[buildCombined]] and [[loadCombined]] (the persisted
-    * layout stores exactly this row shape).
-    */
-  private def assembleF32(
-      it: Iterator[org.apache.spark.sql.Row]): Iterator[CombinedShard] = {
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val decB = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val byTok = new java.util.HashMap[String,
-      (scala.collection.mutable.ArrayBuilder.ofInt,
-       scala.collection.mutable.ArrayBuilder.ofDouble)]()
-    val byBucket = scala.collection.mutable.LongMap
-      .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
-              scala.collection.mutable.ArrayBuffer[Array[Float]])]
-    it.foreach { r =>
-      ids += r.getLong(0)
-      decB += r.getDouble(1)
-      val li = ids.length - 1
-      if (!r.isNullAt(2) && !r.isNullAt(3)) {
-        val e = byBucket.getOrElseUpdate(r.getLong(3),
-          (new scala.collection.mutable.ArrayBuilder.ofInt,
-           scala.collection.mutable.ArrayBuffer.empty[Array[Float]]))
-        e._1 += li
-        e._2 += r.getSeq[Float](2).toArray
-      }
-      if (!r.isNullAt(4)) {
-        r.getSeq[org.apache.spark.sql.Row](4).foreach { p =>
-          var e = byTok.get(p.getString(0))
-          if (e == null) {
-            e = (new scala.collection.mutable.ArrayBuilder.ofInt,
-              new scala.collection.mutable.ArrayBuilder.ofDouble)
-            byTok.put(p.getString(0), e)
-          }
-          e._1 += li
-          e._2 += p.getDouble(1)
-        }
-      }
-    }
-    if (ids.isEmpty) Iterator.empty
-    else {
-      val shard = finishShard(ids.toArray, decB.toArray, byTok)
-      // Bucket blocks in ascending bucket order (deterministic layout;
-      // scan results don't depend on it — the (distance, id) total
-      // order handles ties).
-      val (bs, bOff, vecLocal, flat, dim) = finishVecBlocksF32(byBucket)
-      Iterator.single(CombinedShard(shard, bs, bOff, vecLocal, flat, dim))
-    }
-  }
-
-  /** [[buildCombined]]'s compressed twin: same input frame, same text
-    * shard, vector blocks quantized to int8 at build time against the
-    * caller's trained `absMax` ([[graft.search.Quantizer]]'s protocol).
+  /** [[buildCombined]] into the compressed layout: vector blocks quantized
+    * at build time against the caller's trained `absMax` ([[Int8Codec]]).
     */
   def buildCombinedInt8(
       allIds: DataFrame,
@@ -805,51 +891,46 @@ object ServingFusion {
       numShards: Int = 0,
       prebuiltDocLengths: Option[DataFrame] = None,
       prebuiltTokenDf: Option[DataFrame] = None,
-      frozenStats: Option[(Long, Double)] = None): org.apache.spark.rdd.RDD[CombinedShardInt8] = {
+      frozenStats: Option[(Long, Double)] = None): org.apache.spark.rdd.RDD[CombinedShardInt8] =
+    buildCombinedOf(Int8Codec(absMax), allIds, post, idCol, assigned, dec,
+      numShards, prebuiltDocLengths, prebuiltTokenDf, frozenStats)
+
+  /** [[buildCombined]] for either codec. */
+  private[graft] def buildCombinedOf[B, R, Q](
+      codec: VecCodec[B, R, Q],
+      allIds: DataFrame,
+      post: DataFrame,
+      idCol: String,
+      assigned: DataFrame,
+      dec: Option[DataFrame],
+      numShards: Int,
+      prebuiltDocLengths: Option[DataFrame],
+      prebuiltTokenDf: Option[DataFrame],
+      frozenStats: Option[(Long, Double)]): org.apache.spark.rdd.RDD[CombinedShardOf[B]] =
     combinedRows(allIds, post, idCol, assigned, dec, numShards,
-      prebuiltDocLengths, prebuiltTokenDf, frozenStats).rdd.mapPartitions { it =>
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val decB = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val byTok = new java.util.HashMap[String,
-        (scala.collection.mutable.ArrayBuilder.ofInt,
-         scala.collection.mutable.ArrayBuilder.ofDouble)]()
-      val byBucket = scala.collection.mutable.LongMap
-        .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
-                scala.collection.mutable.ArrayBuffer[(Array[Byte], Float)])]
-      it.foreach { r =>
-        ids += r.getLong(0)
-        decB += r.getDouble(1)
-        val li = ids.length - 1
-        if (!r.isNullAt(2) && !r.isNullAt(3)) {
-          val e = byBucket.getOrElseUpdate(r.getLong(3),
-            (new scala.collection.mutable.ArrayBuilder.ofInt,
-             scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Float)]))
-          e._1 += li
-          val q = Ivf.quantizeArray(r.getSeq[Float](2).toArray, absMax)
-          e._2 += ((q, Ivf.int8Norm(q)))
-        }
-        if (!r.isNullAt(4)) {
-          r.getSeq[org.apache.spark.sql.Row](4).foreach { p =>
-            var e = byTok.get(p.getString(0))
-            if (e == null) {
-              e = (new scala.collection.mutable.ArrayBuilder.ofInt,
-                new scala.collection.mutable.ArrayBuilder.ofDouble)
-              byTok.put(p.getString(0), e)
-            }
-            e._1 += li
-            e._2 += p.getDouble(1)
-          }
-        }
-      }
-      if (ids.isEmpty) Iterator.empty
-      else {
-        val shard = finishShard(ids.toArray, decB.toArray, byTok)
-        val (bs, bOff, vecLocal, codes, norms, dim) =
-          finishVecBlocksInt8(byBucket)
-        Iterator.single(CombinedShardInt8(shard, bs, bOff, vecLocal, codes,
-          norms, dim))
-      }
+      prebuiltDocLengths, prebuiltTokenDf, frozenStats).rdd
+      .mapPartitions(assemble(codec,
+        r => codec.encode(r.getSeq[Float](4).toArray)))
+
+  /** Assemble one partition of `(_id, _dec, _bucket, _post, vector…)`
+    * rows — the [[combinedRows]] frame, or a persisted snapshot's doc rows
+    * ([[loadCombinedOf]]), positionally — into one combined shard. `vec`
+    * encodes a row's vector from its cells at column 4 on; a null there
+    * (or a null bucket) is a text-only doc.
+    */
+  private def assemble[B, R, Q](
+      codec: VecCodec[B, R, Q],
+      vec: org.apache.spark.sql.Row => R)(
+      it: Iterator[org.apache.spark.sql.Row]): Iterator[CombinedShardOf[B]] = {
+    val b = new ShardBuilder[R]
+    it.foreach { r =>
+      val li = b.addDoc(r.getLong(0), r.getDouble(1))
+      if (!r.isNullAt(2) && !r.isNullAt(4)) b.addVec(r.getLong(2), li, vec(r))
+      if (!r.isNullAt(3))
+        r.getSeq[org.apache.spark.sql.Row](3).foreach(p =>
+          b.addPost(p.getString(0), li, p.getDouble(1)))
     }
+    b.finish(codec)
   }
 
   /** Incremental ingest into the combined serving index (VERDICT r15
@@ -907,17 +988,13 @@ object ServingFusion {
       prebuiltTokenDf: DataFrame,
       dec: Option[DataFrame] = None,
       numShards: Int = 0,
-      baseMaxId: Option[Long] = None): org.apache.spark.rdd.RDD[CombinedShard] = {
-    baseMaxId.foreach(requireIdsAbove(newIds, idCol, _))
-    index.union(buildCombined(newIds, newPost, idCol, newAssigned, dec,
-      numShards, prebuiltDocLengths = None,
-      prebuiltTokenDf = Some(prebuiltTokenDf),
-      frozenStats = Some(frozenStats)))
-  }
+      baseMaxId: Option[Long] = None): org.apache.spark.rdd.RDD[CombinedShard] =
+    appendCombinedOf(F32Codec, index, newIds, newPost, idCol, newAssigned,
+      frozenStats, prebuiltTokenDf, dec, numShards, baseMaxId)
 
-  /** [[appendCombined]]'s compressed twin: the segment quantizes against
-    * the SAME `absMax` the base index was built with (another frozen
-    * artifact — re-deriving it per batch would shift every code).
+  /** [[appendCombined]] onto the compressed layout: the segment quantizes
+    * against the SAME `absMax` the base index was built with (another
+    * frozen artifact — re-deriving it per batch would shift every code).
     */
   def appendCombinedInt8(
       index: org.apache.spark.rdd.RDD[CombinedShardInt8],
@@ -930,26 +1007,39 @@ object ServingFusion {
       prebuiltTokenDf: DataFrame,
       dec: Option[DataFrame] = None,
       numShards: Int = 0,
-      baseMaxId: Option[Long] = None): org.apache.spark.rdd.RDD[CombinedShardInt8] = {
-    baseMaxId.foreach(requireIdsAbove(newIds, idCol, _))
-    index.union(buildCombinedInt8(newIds, newPost, idCol, newAssigned,
-      absMax, dec, numShards, prebuiltDocLengths = None,
+      baseMaxId: Option[Long] = None): org.apache.spark.rdd.RDD[CombinedShardInt8] =
+    appendCombinedOf(Int8Codec(absMax), index, newIds, newPost, idCol,
+      newAssigned, frozenStats, prebuiltTokenDf, dec, numShards, baseMaxId)
+
+  /** [[appendCombined]] for either codec. The append-only id watermark
+    * check (see [[appendCombined]]'s preconditions): every arriving id
+    * must be STRICTLY above `baseMaxId` — one min-aggregate over the
+    * batch-sized frame.
+    */
+  private def appendCombinedOf[B, R, Q](
+      codec: VecCodec[B, R, Q],
+      index: org.apache.spark.rdd.RDD[CombinedShardOf[B]],
+      newIds: DataFrame,
+      newPost: DataFrame,
+      idCol: String,
+      newAssigned: DataFrame,
+      frozenStats: (Long, Double),
+      prebuiltTokenDf: DataFrame,
+      dec: Option[DataFrame],
+      numShards: Int,
+      baseMaxId: Option[Long]): org.apache.spark.rdd.RDD[CombinedShardOf[B]] = {
+    baseMaxId.foreach { watermark =>
+      val r = newIds.agg(min(col(idCol).cast("long"))).head()
+      require(r.isNullAt(0) || r.getLong(0) > watermark,
+        s"appendCombined: arriving id ${r.getLong(0)} is <= the base " +
+          s"index's id watermark $watermark — an id present in both base " +
+          "and segment would be scored twice (append-only segments, no " +
+          "upsert; route updates through compaction)")
+    }
+    index.union(buildCombinedOf(codec, newIds, newPost, idCol, newAssigned,
+      dec, numShards, prebuiltDocLengths = None,
       prebuiltTokenDf = Some(prebuiltTokenDf),
       frozenStats = Some(frozenStats)))
-  }
-
-  /** The append-only id watermark check (see [[appendCombined]]'s
-    * preconditions): every arriving id must be STRICTLY above the base
-    * index's max id. One min-aggregate over the batch-sized frame.
-    */
-  private def requireIdsAbove(newIds: DataFrame, idCol: String,
-      watermark: Long): Unit = {
-    val r = newIds.agg(min(col(idCol).cast("long"))).head()
-    require(r.isNullAt(0) || r.getLong(0) > watermark,
-      s"appendCombined: arriving id ${r.getLong(0)} is <= the base " +
-        s"index's id watermark $watermark — an id present in both base " +
-        "and segment would be scored twice (append-only segments, no " +
-        "upsert; route updates through compaction)")
   }
 
   /** COMPACTION (the operation [[appendCombined]]'s scaladoc and the
@@ -995,147 +1085,71 @@ object ServingFusion {
       index: org.apache.spark.rdd.RDD[CombinedShard],
       tombstones: Array[Long] = Array.emptyLongArray,
       decOverrides: Array[(Long, Double)] = Array.empty,
-      numPartitions: Int = 1): org.apache.spark.rdd.RDD[CombinedShard] = {
-    val tomb = sortedTombstones(tombstones)
-    val (ovI, ovD) = sortedOverrides(decOverrides)
-    regroupShards(index, numPartitions).mapPartitions { it =>
-      val shards = it.toArray
-      if (shards.isEmpty) Iterator.empty
-      else {
-        val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val decB = scala.collection.mutable.ArrayBuffer.empty[Double]
-        val byTok = new java.util.HashMap[String,
-          (scala.collection.mutable.ArrayBuilder.ofInt,
-           scala.collection.mutable.ArrayBuilder.ofDouble)]()
-        val byBucket = scala.collection.mutable.LongMap
-          .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
-                  scala.collection.mutable.ArrayBuffer[Array[Float]])]
-        var dim = 0
-        shards.foreach { csh =>
-          val remap = vacuumText(csh.text, tomb, ovI, ovD, ids, decB, byTok)
-          if (csh.dim > 0) dim = csh.dim
-          var blk = 0
-          while (blk < csh.buckets.length) {
-            var r = csh.bOff(blk)
-            val end = csh.bOff(blk + 1)
-            while (r < end) {
-              val nl = remap(csh.vecLocal(r))
-              if (nl >= 0) {
-                val e = byBucket.getOrElseUpdate(csh.buckets(blk),
-                  (new scala.collection.mutable.ArrayBuilder.ofInt,
-                   scala.collection.mutable.ArrayBuffer.empty[Array[Float]]))
-                e._1 += nl
-                e._2 += java.util.Arrays.copyOfRange(
-                  csh.flat, r * csh.dim, (r + 1) * csh.dim)
-              }
-              r += 1
-            }
-            blk += 1
-          }
-        }
-        if (ids.isEmpty) Iterator.empty
-        else {
-          val shard = finishShard(ids.toArray, decB.toArray, byTok)
-          val (bs, bOff, vecLocal, flat, fDim) = finishVecBlocksF32(byBucket)
-          Iterator.single(CombinedShard(shard, bs, bOff, vecLocal, flat,
-            if (fDim > 0) fDim else dim))
-        }
-      }
-    }
-  }
+      numPartitions: Int = 1): org.apache.spark.rdd.RDD[CombinedShard] =
+    compactCombinedOf(F32Codec, index, tombstones, decOverrides, numPartitions)
 
-  /** [[compactCombined]]'s compressed twin. Codes and stored norms are
-    * copied verbatim (recomputing norms would be exact too, but copying
-    * keeps the invariant self-evident): same frozen `absMax` discipline
-    * as [[appendCombinedInt8]].
+  /** [[compactCombined]] over the compressed layout. Codes and stored norms
+    * are copied verbatim (recomputing norms would be exact too, but
+    * copying keeps the invariant self-evident), so no `absMax` is read.
     */
   def compactCombinedInt8(
       index: org.apache.spark.rdd.RDD[CombinedShardInt8],
       tombstones: Array[Long] = Array.emptyLongArray,
       decOverrides: Array[(Long, Double)] = Array.empty,
-      numPartitions: Int = 1): org.apache.spark.rdd.RDD[CombinedShardInt8] = {
+      numPartitions: Int = 1): org.apache.spark.rdd.RDD[CombinedShardInt8] =
+    compactCombinedOf(Int8Codec(Double.NaN), index, tombstones, decOverrides,
+      numPartitions)
+
+  /** [[compactCombined]] for either codec. */
+  private def compactCombinedOf[B, R, Q](
+      codec: VecCodec[B, R, Q],
+      index: org.apache.spark.rdd.RDD[CombinedShardOf[B]],
+      tombstones: Array[Long],
+      decOverrides: Array[(Long, Double)],
+      numPartitions: Int): org.apache.spark.rdd.RDD[CombinedShardOf[B]] = {
     val tomb = sortedTombstones(tombstones)
     val (ovI, ovD) = sortedOverrides(decOverrides)
-    regroupShards(index, numPartitions).mapPartitions { it =>
-      val shards = it.toArray
-      if (shards.isEmpty) Iterator.empty
-      else {
-        val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val decB = scala.collection.mutable.ArrayBuffer.empty[Double]
-        val byTok = new java.util.HashMap[String,
-          (scala.collection.mutable.ArrayBuilder.ofInt,
-           scala.collection.mutable.ArrayBuilder.ofDouble)]()
-        val byBucket = scala.collection.mutable.LongMap
-          .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
-                  scala.collection.mutable.ArrayBuffer[(Array[Byte], Float)])]
-        var dim = 0
-        shards.foreach { csh =>
-          val remap = vacuumText(csh.text, tomb, ovI, ovD, ids, decB, byTok)
-          if (csh.dim > 0) dim = csh.dim
-          var blk = 0
-          while (blk < csh.buckets.length) {
-            var r = csh.bOff(blk)
-            val end = csh.bOff(blk + 1)
-            while (r < end) {
-              val nl = remap(csh.vecLocal(r))
-              if (nl >= 0) {
-                val e = byBucket.getOrElseUpdate(csh.buckets(blk),
-                  (new scala.collection.mutable.ArrayBuilder.ofInt,
-                   scala.collection.mutable.ArrayBuffer
-                     .empty[(Array[Byte], Float)]))
-                e._1 += nl
-                e._2 += ((java.util.Arrays.copyOfRange(
-                  csh.codes, r * csh.dim, (r + 1) * csh.dim), csh.norms(r)))
-              }
-              r += 1
-            }
-            blk += 1
+    // Regroup whole shards into `numPartitions` partitions. `coalesce`
+    // alone can only REDUCE partition count (ADVICE r17: asking for more
+    // shards than the union currently has silently yielded fewer) —
+    // growing needs the shuffle. Whole shard OBJECTS move, never doc rows,
+    // so the output shard count is min(numPartitions, input shards): a
+    // compaction cannot split one resident shard, only a fresh build
+    // chooses finer granularity.
+    val n = math.max(1, numPartitions)
+    index.coalesce(n, shuffle = n > index.getNumPartitions).mapPartitions { it =>
+      val b = new ShardBuilder[R]
+      it.foreach { csh =>
+        val remap = vacuumText(csh.text, tomb, ovI, ovD, b)
+        var blk = 0
+        while (blk < csh.buckets.length) {
+          var r = csh.bOff(blk)
+          val end = csh.bOff(blk + 1)
+          while (r < end) {
+            val nl = remap(csh.vecLocal(r))
+            if (nl >= 0) b.addVec(csh.buckets(blk), nl, codec.row(csh.vecs, r))
+            r += 1
           }
-        }
-        if (ids.isEmpty) Iterator.empty
-        else {
-          val shard = finishShard(ids.toArray, decB.toArray, byTok)
-          val (bs, bOff, vecLocal, codes, norms, iDim) =
-            finishVecBlocksInt8(byBucket)
-          Iterator.single(CombinedShardInt8(shard, bs, bOff, vecLocal, codes,
-            norms, if (iDim > 0) iDim else dim))
+          blk += 1
         }
       }
+      b.finish(codec)
     }
   }
 
-  /** Regroup whole shards into `numPartitions` partitions for the two
-    * compaction kernels. `coalesce` alone can only REDUCE partition count
-    * (ADVICE r17: asking for more shards than the union currently has
-    * silently yielded fewer) — growing needs the shuffle. Whole shard
-    * OBJECTS move, never doc rows, so the output shard count is
-    * min(numPartitions, input shards): a compaction cannot split one
-    * resident shard, only a fresh build chooses finer granularity.
-    */
-  private def regroupShards[S: scala.reflect.ClassTag](
-      index: org.apache.spark.rdd.RDD[S],
-      numPartitions: Int): org.apache.spark.rdd.RDD[S] = {
-    val n = math.max(1, numPartitions)
-    index.coalesce(n, shuffle = n > index.getNumPartitions)
-  }
-
-  /** Shared text-side vacuum+merge step for the two compaction kernels:
-    * appends `sh`'s SURVIVING docs (not in `tomb`) into the partition's
-    * merged id/decay builders — decay overridden where `ovI` says so — and
-    * folds each token slot's surviving postings into `byTok` with local
-    * indices remapped to the merged layout. Returns old-local → new-local
-    * (−1 = tombstoned), which the callers use to vacuum the vector blocks.
+  /** Compaction's text-side vacuum+merge step: appends `sh`'s SURVIVING
+    * docs (not in `tomb`) into the partition's builder — decay overridden
+    * where `ovI` says so — and folds each token slot's surviving postings
+    * in with local indices remapped to the merged layout. Returns
+    * old-local → new-local (−1 = tombstoned), which the caller uses to
+    * vacuum the vector blocks.
     */
   private def vacuumText(
       sh: Shard,
       tomb: Array[Long],
       ovI: Array[Long],
       ovD: Array[Double],
-      ids: scala.collection.mutable.ArrayBuffer[Long],
-      decB: scala.collection.mutable.ArrayBuffer[Double],
-      byTok: java.util.HashMap[String,
-        (scala.collection.mutable.ArrayBuilder.ofInt,
-         scala.collection.mutable.ArrayBuilder.ofDouble)]): Array[Int] = {
+      b: ShardBuilder[_]): Array[Int] = {
     val remap = new Array[Int](sh.ids.length)
     var li = 0
     while (li < sh.ids.length) {
@@ -1143,12 +1157,10 @@ object ServingFusion {
       if (tomb.length > 0 && java.util.Arrays.binarySearch(tomb, id) >= 0)
         remap(li) = -1
       else {
-        remap(li) = ids.length
-        ids += id
         val oi =
           if (ovI.length == 0) -1
           else java.util.Arrays.binarySearch(ovI, id)
-        decB += (if (oi >= 0) ovD(oi) else sh.dec(li))
+        remap(li) = b.addDoc(id, if (oi >= 0) ovD(oi) else sh.dec(li))
       }
       li += 1
     }
@@ -1161,14 +1173,7 @@ object ServingFusion {
       while (e < end) {
         val nl = remap(sh.docIx(e))
         if (nl >= 0) {
-          if (slot == null) {
-            slot = byTok.get(sh.tokens(s))
-            if (slot == null) {
-              slot = (new scala.collection.mutable.ArrayBuilder.ofInt,
-                new scala.collection.mutable.ArrayBuilder.ofDouble)
-              byTok.put(sh.tokens(s), slot)
-            }
-          }
+          if (slot == null) slot = b.slot(sh.tokens(s))
           slot._1 += nl
           slot._2 += sh.w(e)
         }
@@ -1184,121 +1189,47 @@ object ServingFusion {
   // arena under pkg/persistence/; here the snapshot is a parquet table
   // in the index's own doc-row shape). =====
 
-  /** The persisted combined layout's doc-row schema — exactly the
-    * [[combinedRows]] frame ([[assembleF32]]'s positional contract), so
-    * load is repartition + the same assembly pass a build runs.
+  /** The persisted layout's doc-row schema,
+    * `(_id, _dec, <codec vector columns>, _bucket, _post)`: stored term
+    * weights and vector cells verbatim (int8 codes as binary — a load
+    * must not re-quantize), so load is repartition + the same assembly
+    * pass a build runs.
     */
-  private val combinedDocSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("_id",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("_dec",
-      org.apache.spark.sql.types.DoubleType, nullable = false),
-    org.apache.spark.sql.types.StructField("_vec",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, containsNull = false),
-      nullable = true),
-    org.apache.spark.sql.types.StructField("_bucket",
-      org.apache.spark.sql.types.LongType, nullable = true),
-    org.apache.spark.sql.types.StructField("_post",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("token",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("w",
-            org.apache.spark.sql.types.DoubleType, nullable = false))),
-        containsNull = false), nullable = true)))
-
-  /** The int8 twin's doc-row schema: codes stored VERBATIM as binary (a
-    * load must not re-quantize — absMax rides the meta table instead).
-    */
-  private val combinedDocSchemaInt8 = org.apache.spark.sql.types.StructType(
-    Seq(
-      org.apache.spark.sql.types.StructField("_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("_dec",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("_codes",
-        org.apache.spark.sql.types.BinaryType, nullable = true),
-      org.apache.spark.sql.types.StructField("_norm",
-        org.apache.spark.sql.types.FloatType, nullable = true),
-      org.apache.spark.sql.types.StructField("_bucket",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("_post",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("token",
-              org.apache.spark.sql.types.StringType, nullable = false),
-            org.apache.spark.sql.types.StructField("w",
-              org.apache.spark.sql.types.DoubleType, nullable = false))),
+  private def docSchema(codec: VecCodec[_, _, _]): StructType = StructType(
+    Seq(StructField("_id", LongType, nullable = false),
+      StructField("_dec", DoubleType, nullable = false)) ++
+      codec.docFields ++
+      Seq(StructField("_bucket", LongType, nullable = true),
+        StructField("_post", ArrayType(StructType(Seq(
+          StructField("token", StringType, nullable = false),
+          StructField("w", DoubleType, nullable = false))),
           containsNull = false), nullable = true)))
 
-  /** One shard exploded back into its doc rows, the inverse of
-    * [[assembleF32]]: per local doc — id, decay factor, its vector row
-    * (null for text-only docs) + owning bucket, and its (token, weight)
+  /** One shard exploded back into its [[docSchema]] rows, the inverse of
+    * [[assemble]]: per local doc — id, decay factor, its vector cells
+    * (nulls for text-only docs), owning bucket, and its (token, weight)
     * posting list transposed out of the CSR. Partition-local work,
     * bounded by the shard.
     */
-  private def explodeDocRows(csh: CombinedShard): Iterator[org.apache.spark.sql.Row] = {
+  private def explodeDocRows[B, R, Q](
+      codec: VecCodec[B, R, Q],
+      csh: CombinedShardOf[B]): Iterator[org.apache.spark.sql.Row] = {
     val sh = csh.text
-    val n = sh.ids.length
-    val (vecRow, bucketOf) = vecRowsOf(sh.ids.length, csh.buckets, csh.bOff,
-      csh.vecLocal)
-    val posts = postsOf(sh)
-    Iterator.tabulate(n) { li =>
-      val r = vecRow(li)
-      org.apache.spark.sql.Row(
-        sh.ids(li), sh.dec(li),
-        if (r < 0) null
-        else java.util.Arrays.copyOfRange(csh.flat, r * csh.dim,
-          (r + 1) * csh.dim),
-        if (r < 0) null else java.lang.Long.valueOf(bucketOf(li)),
-        posts(li))
-    }
-  }
-
-  private def explodeDocRowsInt8(
-      csh: CombinedShardInt8): Iterator[org.apache.spark.sql.Row] = {
-    val sh = csh.text
-    val n = sh.ids.length
-    val (vecRow, bucketOf) = vecRowsOf(sh.ids.length, csh.buckets, csh.bOff,
-      csh.vecLocal)
-    val posts = postsOf(sh)
-    Iterator.tabulate(n) { li =>
-      val r = vecRow(li)
-      org.apache.spark.sql.Row(
-        sh.ids(li), sh.dec(li),
-        if (r < 0) null
-        else java.util.Arrays.copyOfRange(csh.codes, r * csh.dim,
-          (r + 1) * csh.dim),
-        if (r < 0) null else java.lang.Float.valueOf(csh.norms(r)),
-        if (r < 0) null else java.lang.Long.valueOf(bucketOf(li)),
-        posts(li))
-    }
-  }
-
-  /** local doc → (vector row or −1, owning bucket) for an explode pass. */
-  private def vecRowsOf(n: Int, buckets: Array[Long], bOff: Array[Int],
-      vecLocal: Array[Int]): (Array[Int], Array[Long]) = {
-    val vecRow = Array.fill(n)(-1)
-    val bucketOf = new Array[Long](n)
+    // local doc → (vector row or −1, owning bucket)
+    val vecRow = Array.fill(sh.ids.length)(-1)
+    val bucketOf = new Array[Long](sh.ids.length)
     var blk = 0
-    while (blk < buckets.length) {
-      var r = bOff(blk)
-      val end = bOff(blk + 1)
-      while (r < end) {
-        vecRow(vecLocal(r)) = r
-        bucketOf(vecLocal(r)) = buckets(blk)
+    while (blk < csh.buckets.length) {
+      var r = csh.bOff(blk)
+      while (r < csh.bOff(blk + 1)) {
+        vecRow(csh.vecLocal(r)) = r
+        bucketOf(csh.vecLocal(r)) = csh.buckets(blk)
         r += 1
       }
       blk += 1
     }
-    (vecRow, bucketOf)
-  }
-
-  /** local doc → (token, w) posting rows (null when the doc has none),
-    * transposed out of the shard's token-major CSR.
-    */
-  private def postsOf(sh: Shard): Array[Seq[org.apache.spark.sql.Row]] = {
+    // local doc → (token, w) posting rows (null when the doc has none),
+    // transposed out of the shard's token-major CSR
     val posts = new Array[scala.collection.mutable.ArrayBuffer[
       org.apache.spark.sql.Row]](sh.ids.length)
     var s = 0
@@ -1314,7 +1245,14 @@ object ServingFusion {
       }
       s += 1
     }
-    posts.map(p => if (p == null) null else p.toSeq)
+    val noVec = codec.docFields.map(_ => null)
+    Iterator.tabulate(sh.ids.length) { li =>
+      val r = vecRow(li)
+      org.apache.spark.sql.Row.fromSeq(Seq[Any](sh.ids(li), sh.dec(li)) ++
+        (if (r < 0) noVec else codec.cells(codec.row(csh.vecs, r))) ++
+        Seq(if (r < 0) null else java.lang.Long.valueOf(bucketOf(li)),
+          if (posts(li) == null) null else posts(li).toSeq))
+    }
   }
 
   /** Persist a combined serving index with everything a restart needs to
@@ -1336,27 +1274,49 @@ object ServingFusion {
       index: org.apache.spark.rdd.RDD[CombinedShard],
       path: String,
       frozenStats: (Long, Double),
+      tokenDf: DataFrame): Long =
+    saveCombinedOf(F32Codec, index, path, frozenStats, tokenDf)
+
+  /** [[saveCombined]] for the compressed layout: codes + norms stored
+    * verbatim (never re-quantized), `absMax` rides the meta table — the
+    * complete frozen-artifact set for int8 appends.
+    */
+  def saveCombinedInt8(
+      index: org.apache.spark.rdd.RDD[CombinedShardInt8],
+      path: String,
+      absMax: Double,
+      frozenStats: (Long, Double),
+      tokenDf: DataFrame): Long =
+    saveCombinedOf(Int8Codec(absMax), index, path, frozenStats, tokenDf)
+
+  /** [[saveCombined]] for either codec. */
+  private def saveCombinedOf[B, R, Q](
+      codec: VecCodec[B, R, Q],
+      index: org.apache.spark.rdd.RDD[CombinedShardOf[B]],
+      path: String,
+      frozenStats: (Long, Double),
       tokenDf: DataFrame): Long = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val maxId = maxIdOf(index.map(csh =>
-      if (csh.text.ids.isEmpty) Long.MinValue else csh.text.ids.max))
-    spark.createDataFrame(index.mapPartitions(_.flatMap(explodeDocRows)),
-        combinedDocSchema)
+    // The snapshot's id watermark: max doc id across shards in ONE job
+    // (fold handles the empty index — MinValue, above which every id
+    // sits, so recovery filters nothing).
+    val maxId = index.map(csh =>
+        if (csh.text.ids.isEmpty) Long.MinValue else csh.text.ids.max)
+      .fold(Long.MinValue)(math.max)
+    spark.createDataFrame(
+        index.mapPartitions(_.flatMap(explodeDocRows(codec, _))),
+        docSchema(codec))
       .write.mode("overwrite").parquet(s"$path/docs")
     tokenDf.select(col("token"), col("df").cast("long").as("df"))
       .write.mode("overwrite").parquet(s"$path/tokendf")
-    spark.createDataFrame(Seq((frozenStats._1, frozenStats._2, maxId)))
-      .toDF("total_docs", "avgdl", "max_id")
+    codec.meta.foldLeft(
+        spark.createDataFrame(Seq((frozenStats._1, frozenStats._2, maxId)))
+          .toDF("total_docs", "avgdl", "max_id")) {
+        case (m, (name, v)) => m.withColumn(name, lit(v))
+      }
       .write.mode("overwrite").parquet(s"$path/meta")
     maxId
   }
-
-  /** The snapshot's id watermark: max doc id across shards in ONE job
-    * (fold handles the empty index — MinValue, above which every id
-    * sits, so recovery filters nothing).
-    */
-  private def maxIdOf(perShard: org.apache.spark.rdd.RDD[Long]): Long =
-    perShard.fold(Long.MinValue)(math.max)
 
   /** A restored [[saveCombined]] snapshot: the index plus every frozen
     * artifact appends need, and the snapshot's id watermark `maxId` — the
@@ -1369,6 +1329,7 @@ object ServingFusion {
       tokenDf: DataFrame,
       maxId: Long)
 
+  /** A restored [[saveCombinedInt8]] snapshot, with its frozen `absMax`. */
   final case class LoadedCombinedInt8(
       index: org.apache.spark.rdd.RDD[CombinedShardInt8],
       absMax: Double,
@@ -1385,43 +1346,9 @@ object ServingFusion {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       numShards: Int = 0): LoadedCombined = {
-    val meta = spark.read.parquet(s"$path/meta")
-      .select(col("total_docs").cast("long"), col("avgdl").cast("double"),
-        col("max_id").cast("long"))
-      .head()
-    val docs = spark.read.parquet(s"$path/docs")
-      .select(col("_id"), col("_dec"), col("_vec"), col("_bucket"),
-        col("_post"))
-    LoadedCombined(
-      docMajor(docs, numShards).rdd.mapPartitions(assembleF32),
-      (meta.getLong(0), meta.getDouble(1)),
-      spark.read.parquet(s"$path/tokendf"),
-      meta.getLong(2))
-  }
-
-  /** [[saveCombined]]'s compressed twin: codes + norms stored verbatim
-    * (never re-quantized), `absMax` rides the meta table — the complete
-    * frozen-artifact set for int8 appends.
-    */
-  def saveCombinedInt8(
-      index: org.apache.spark.rdd.RDD[CombinedShardInt8],
-      path: String,
-      absMax: Double,
-      frozenStats: (Long, Double),
-      tokenDf: DataFrame): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val maxId = maxIdOf(index.map(csh =>
-      if (csh.text.ids.isEmpty) Long.MinValue else csh.text.ids.max))
-    spark.createDataFrame(index.mapPartitions(_.flatMap(explodeDocRowsInt8)),
-        combinedDocSchemaInt8)
-      .write.mode("overwrite").parquet(s"$path/docs")
-    tokenDf.select(col("token"), col("df").cast("long").as("df"))
-      .write.mode("overwrite").parquet(s"$path/tokendf")
-    spark.createDataFrame(Seq((frozenStats._1, frozenStats._2, absMax,
-        maxId)))
-      .toDF("total_docs", "avgdl", "abs_max", "max_id")
-      .write.mode("overwrite").parquet(s"$path/meta")
-    maxId
+    val (index, meta) = loadCombinedOf(spark, path, numShards, _ => F32Codec)
+    LoadedCombined(index, frozenOf(meta), spark.read.parquet(s"$path/tokendf"),
+      meta.getAs[Long]("max_id"))
   }
 
   /** Restore a [[saveCombinedInt8]] snapshot. */
@@ -1429,68 +1356,33 @@ object ServingFusion {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       numShards: Int = 0): LoadedCombinedInt8 = {
-    val meta = spark.read.parquet(s"$path/meta")
-      .select(col("total_docs").cast("long"), col("avgdl").cast("double"),
-        col("abs_max").cast("double"), col("max_id").cast("long"))
-      .head()
-    val docs = spark.read.parquet(s"$path/docs")
-      .select(col("_id"), col("_dec"), col("_codes"), col("_norm"),
-        col("_bucket"), col("_post"))
-    LoadedCombinedInt8(
-      docMajor(docs, numShards).rdd.mapPartitions(assembleInt8Stored),
-      meta.getDouble(2), (meta.getLong(0), meta.getDouble(1)),
-      spark.read.parquet(s"$path/tokendf"), meta.getLong(3))
+    val (index, meta) = loadCombinedOf(spark, path, numShards,
+      m => Int8Codec(m.getAs[Double]("abs_max")))
+    LoadedCombinedInt8(index, meta.getAs[Double]("abs_max"), frozenOf(meta),
+      spark.read.parquet(s"$path/tokendf"), meta.getAs[Long]("max_id"))
   }
 
-  /** Assemble one partition of
-    * `(_id, _dec, _codes, _norm, _bucket, _post)` rows — the persisted
-    * int8 layout, positionally — into one [[CombinedShardInt8]]: codes
-    * and norms carried VERBATIM (never re-quantized), the int8 analogue
-    * of [[assembleF32]].
+  /** A snapshot's doc rows, assembled by the codec its `meta/` row names,
+    * plus that row.
     */
-  private def assembleInt8Stored(
-      it: Iterator[org.apache.spark.sql.Row]): Iterator[CombinedShardInt8] = {
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val decB = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val byTok = new java.util.HashMap[String,
-      (scala.collection.mutable.ArrayBuilder.ofInt,
-       scala.collection.mutable.ArrayBuilder.ofDouble)]()
-    val byBucket = scala.collection.mutable.LongMap
-      .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
-              scala.collection.mutable.ArrayBuffer[(Array[Byte], Float)])]
-    it.foreach { r =>
-      ids += r.getLong(0)
-      decB += r.getDouble(1)
-      val li = ids.length - 1
-      if (!r.isNullAt(2) && !r.isNullAt(4)) {
-        val e = byBucket.getOrElseUpdate(r.getLong(4),
-          (new scala.collection.mutable.ArrayBuilder.ofInt,
-           scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Float)]))
-        e._1 += li
-        e._2 += ((r.getAs[Array[Byte]](2), r.getFloat(3)))
-      }
-      if (!r.isNullAt(5)) {
-        r.getSeq[org.apache.spark.sql.Row](5).foreach { p =>
-          var e = byTok.get(p.getString(0))
-          if (e == null) {
-            e = (new scala.collection.mutable.ArrayBuilder.ofInt,
-              new scala.collection.mutable.ArrayBuilder.ofDouble)
-            byTok.put(p.getString(0), e)
-          }
-          e._1 += li
-          e._2 += p.getDouble(1)
-        }
-      }
-    }
-    if (ids.isEmpty) Iterator.empty
-    else {
-      val shard = finishShard(ids.toArray, decB.toArray, byTok)
-      val (bs, bOff, vecLocal, codes, norms, dim) =
-        finishVecBlocksInt8(byBucket)
-      Iterator.single(CombinedShardInt8(shard, bs, bOff, vecLocal, codes,
-        norms, dim))
-    }
+  private def loadCombinedOf[B, R, Q](
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      numShards: Int,
+      codecOf: org.apache.spark.sql.Row => VecCodec[B, R, Q])
+      : (org.apache.spark.rdd.RDD[CombinedShardOf[B]], org.apache.spark.sql.Row) = {
+    val meta = spark.read.parquet(s"$path/meta").head()
+    val codec = codecOf(meta)
+    val docs = spark.read.parquet(s"$path/docs").select(
+      ("_id" +: "_dec" +: "_bucket" +: "_post" +: codec.docFields.map(_.name))
+        .map(col): _*)
+    (docMajor(docs, numShards).rdd.mapPartitions(
+      assemble(codec, codec.stored(_, 4))), meta)
   }
+
+  /** The frozen corpus scalars of a snapshot's `meta/` row. */
+  private def frozenOf(meta: org.apache.spark.sql.Row): (Long, Double) =
+    (meta.getAs[Long]("total_docs"), meta.getAs[Double]("avgdl"))
 
   /** Per-partition partial for the combined pass: the text-leg
     * [[FusedPartial]] plus a kVec-bounded vector top-k whose entries CARRY
@@ -1603,11 +1495,45 @@ object ServingFusion {
       kVec: Int = 10,
       metric: String = "cosine",
       tombstones: Array[Long] = Array.emptyLongArray,
-      decOverrides: Array[(Long, Double)] = Array.empty): Array[(Long, Long, Double)] = {
+      decOverrides: Array[(Long, Double)] = Array.empty): Array[(Long, Long, Double)] =
+    fusedTopKCombinedOf(F32Codec, combined, cents, queries, alpha0, k,
+      nProbe, kVec, metric, tombstones, decOverrides)
+
+  /** [[fusedTopKCombined]] over the COMPRESSED layout: one job, text leg
+    * identical, vector leg the [[Int8Codec]] kernel — queries quantized
+    * once on the driver against the same trained `absMax`, so the vector
+    * leg is bit-identical to the two-leg int8 pipeline (spec-pinned).
+    */
+  def fusedTopKCombinedInt8(
+      combined: org.apache.spark.rdd.RDD[CombinedShardInt8],
+      cents: Array[Array[Float]],
+      queries: Seq[ServedQuery],
+      absMax: Double,
+      alpha0: Double,
+      k: Int,
+      nProbe: Int,
+      kVec: Int = 10,
+      tombstones: Array[Long] = Array.emptyLongArray,
+      decOverrides: Array[(Long, Double)] = Array.empty): Array[(Long, Long, Double)] =
+    fusedTopKCombinedOf(Int8Codec(absMax), combined, cents, queries, alpha0,
+      k, nProbe, kVec, "cosine", tombstones, decOverrides)
+
+  /** [[fusedTopKCombined]] for either codec. */
+  private def fusedTopKCombinedOf[B, R, Q](
+      codec: VecCodec[B, R, Q],
+      combined: org.apache.spark.rdd.RDD[CombinedShardOf[B]],
+      cents: Array[Array[Float]],
+      queries: Seq[ServedQuery],
+      alpha0: Double,
+      k: Int,
+      nProbe: Int,
+      kVec: Int,
+      metric: String,
+      tombstones: Array[Long],
+      decOverrides: Array[(Long, Double)]): Array[(Long, Long, Double)] = {
     val tomb = sortedTombstones(tombstones)
     val (ovIds, ovDec) = sortedOverrides(decOverrides)
     val alpha = if (alpha0 < 0 || alpha0 > 1) 0.5 else alpha0
-    val l2 = metric == "l2"
     val qs = queries.sortBy(_.qid).toArray
     require(qs.map(_.qid).distinct.length == qs.length,
       "fusedTopKCombined: duplicate qids in the batch")
@@ -1619,30 +1545,18 @@ object ServingFusion {
     val qids = qs.map(_.qid)
     val qvecs = qs.map(_.qvec)
     val toksByQ = qs.map(_.tokens.sortBy(_._1))
-    // Probe selection on the driver (the descent analogue), then inverted
-    // to per-query ascending bucket lists for the partition scan. Same
-    // metric contract as [[Ivf.searchBatchedFast]]: cosine = 1 − dot over
-    // pre-normalized vectors; l2 = squared euclidean via ‖x‖² − 2x·q + ‖q‖².
-    val adj = Ivf.bucketAdj(cents, metric)
-    val qsq: Array[Double] =
-      if (l2) qvecs.map { qv =>
-        var s = 0.0; var j = 0
-        while (j < qv.length) { s += qv(j).toDouble * qv(j); j += 1 }
-        s
-      } else null
-    val probedByQ = invertProbes(
-      Ivf.probeAssignments(cents, adj, l2 = l2, qvecs, nProbe), nq)
-    val bc = combined.sparkContext.broadcast(
-      (qvecs, toksByQ, probedByQ, qsq, tomb, ovIds, ovDec))
+    val bc = combined.sparkContext.broadcast((codec.prepare(qvecs, metric),
+      toksByQ, probedBuckets(cents, metric, qvecs, nProbe), tomb, ovIds,
+      ovDec))
     val partials = combined.mapPartitions { it =>
-      val (qvs, toks, probed, qsqB, tombB, ovI, ovD) = bc.value
+      val (prepared, toks, probed, tombB, ovI, ovD) = bc.value
       def decOf(id: Long, baked: Double): Double =
         if (ovI.length == 0) baked
         else {
           val i = java.util.Arrays.binarySearch(ovI, id)
           if (i >= 0) ovD(i) else baked
         }
-      val p = new CombinedPartial(qvs.length, k, kVec)
+      val p = new CombinedPartial(prepared.length, k, kVec)
       it.foreach { csh =>
         val sh = csh.text
         val n = sh.ids.length
@@ -1651,7 +1565,7 @@ object ServingFusion {
         val touched = new Array[Int](n)
         var epoch = 0
         var qi = 0
-        while (qi < qvs.length) {
+        while (qi < prepared.length) {
           epoch += 1
           // Text leg — [[scoreTokens]], the same loop [[fusedTopK]] runs.
           val tn = scoreTokens(sh, toks(qi), acc, seen, touched, epoch)
@@ -1669,7 +1583,7 @@ object ServingFusion {
           }
           // Vector leg over this partition's probed bucket blocks, with
           // hydration read off the text accumulators in the same epoch.
-          val qv = qvs(qi)
+          val q = prepared(qi)
           val pb = probed(qi)
           var bi = 0
           while (bi < pb.length) {
@@ -1682,132 +1596,7 @@ object ServingFusion {
                 val id = sh.ids(li)
                 if (tombB.length == 0 ||
                     java.util.Arrays.binarySearch(tombB, id) < 0) {
-                  var dot = 0f
-                  var j = 0
-                  val off = r * csh.dim
-                  while (j < csh.dim) { dot += csh.flat(off + j) * qv(j); j += 1 }
-                  val dist =
-                    if (qsqB != null)
-                      csh.rowSq(r).toDouble - 2.0d * dot + qsqB(qi)
-                    else 1.0d - dot
-                  val hasT = seen(li) == epoch
-                  p.insertVec(qi, dist, id,
-                    if (hasT) acc(li) else 0.0, decOf(id, sh.dec(li)), hasT)
-                }
-                r += 1
-              }
-            }
-            bi += 1
-          }
-          qi += 1
-        }
-      }
-      Iterator.single(p)
-    }
-    val merged = Ivf.reducePartials(partials,
-      new CombinedPartial(nq, k, kVec),
-      (a: CombinedPartial, b: CombinedPartial) => a.merge(b))
-    bc.destroy()
-    blendCombined(qids, merged, alpha, k)
-  }
-
-  /** [[fusedTopKCombined]] over the COMPRESSED layout: one job, text leg
-    * identical, vector leg the integer-dot int8-cosine kernel — queries
-    * quantized once on the driver against the same trained `absMax`, per
-    * candidate `1 − clamp(dot/(‖x‖·‖q‖))` exactly as
-    * [[Ivf.searchBatchedFastInt8]] scores (zero-norm sides score 1.0),
-    * so the vector leg is bit-identical to the two-leg int8 pipeline
-    * (spec-pinned). Cosine only, like the reference's int8 mode.
-    */
-  def fusedTopKCombinedInt8(
-      combined: org.apache.spark.rdd.RDD[CombinedShardInt8],
-      cents: Array[Array[Float]],
-      queries: Seq[ServedQuery],
-      absMax: Double,
-      alpha0: Double,
-      k: Int,
-      nProbe: Int,
-      kVec: Int = 10,
-      tombstones: Array[Long] = Array.emptyLongArray,
-      decOverrides: Array[(Long, Double)] = Array.empty): Array[(Long, Long, Double)] = {
-    val tomb = sortedTombstones(tombstones)
-    val (ovIds, ovDec) = sortedOverrides(decOverrides)
-    val alpha = if (alpha0 < 0 || alpha0 > 1) 0.5 else alpha0
-    val qs = queries.sortBy(_.qid).toArray
-    require(qs.map(_.qid).distinct.length == qs.length,
-      "fusedTopKCombinedInt8: duplicate qids in the batch")
-    require(qs.forall(_.qvec != null),
-      "fusedTopKCombinedInt8: every ServedQuery needs a query vector")
-    val nq = qs.length
-    if (nq == 0) return Array.empty
-    val qids = qs.map(_.qid)
-    val qvecs = qs.map(_.qvec)
-    val toksByQ = qs.map(_.tokens.sortBy(_._1))
-    val qcodes = qvecs.map(Ivf.quantizeArray(_, absMax))
-    val qnorms = qcodes.map(Ivf.int8Norm)
-    val probedByQ = invertProbes(Ivf.probeAssignments(cents,
-      Ivf.bucketAdj(cents, "cosine"), l2 = false, qvecs, nProbe), nq)
-    val bc = combined.sparkContext.broadcast(
-      (qcodes, qnorms, toksByQ, probedByQ, tomb, ovIds, ovDec))
-    val partials = combined.mapPartitions { it =>
-      val (qcs, qns, toks, probed, tombB, ovI, ovD) = bc.value
-      def decOf(id: Long, baked: Double): Double =
-        if (ovI.length == 0) baked
-        else {
-          val i = java.util.Arrays.binarySearch(ovI, id)
-          if (i >= 0) ovD(i) else baked
-        }
-      val p = new CombinedPartial(qcs.length, k, kVec)
-      it.foreach { csh =>
-        val sh = csh.text
-        val n = sh.ids.length
-        val acc = new Array[Double](n)
-        val seen = new Array[Int](n)
-        val touched = new Array[Int](n)
-        var epoch = 0
-        var qi = 0
-        while (qi < qcs.length) {
-          epoch += 1
-          val tn = scoreTokens(sh, toks(qi), acc, seen, touched, epoch)
-          var i = 0
-          while (i < tn) {
-            val d = touched(i)
-            if (tombB.length == 0 ||
-                java.util.Arrays.binarySearch(tombB, sh.ids(d)) < 0) {
-              val raw = acc(d)
-              val dc = decOf(sh.ids(d), sh.dec(d))
-              if (raw > p.text.maxRaw(qi)) p.text.maxRaw(qi) = raw
-              p.text.insert(qi, -(raw * dc), sh.ids(d), raw, dc)
-            }
-            i += 1
-          }
-          val qc = qcs(qi)
-          val qn = qns(qi).toDouble
-          val pb = probed(qi)
-          var bi = 0
-          while (bi < pb.length) {
-            val blk = csh.bucketBlock.getOrElse(pb(bi).toLong, -1)
-            if (blk >= 0) {
-              var r = csh.bOff(blk)
-              val end = csh.bOff(blk + 1)
-              while (r < end) {
-                val li = csh.vecLocal(r)
-                val id = sh.ids(li)
-                if (tombB.length == 0 ||
-                    java.util.Arrays.binarySearch(tombB, id) < 0) {
-                  var dot = 0
-                  var j = 0
-                  val off = r * csh.dim
-                  while (j < csh.dim) { dot += csh.codes(off + j).toInt * qc(j).toInt; j += 1 }
-                  val norm = csh.norms(r)
-                  val dist =
-                    if (norm == 0f || qn == 0.0) 1.0
-                    else {
-                      var sim = dot.toDouble / (norm.toDouble * qn)
-                      if (sim > 1.0) sim = 1.0
-                      if (sim < -1.0) sim = -1.0
-                      1.0 - sim
-                    }
+                  val dist = codec.dist(csh.vecs, r, q)
                   val hasT = seen(li) == epoch
                   p.insertVec(qi, dist, id,
                     if (hasT) acc(li) else 0.0, decOf(id, sh.dec(li)), hasT)
@@ -1858,12 +1647,20 @@ object ServingFusion {
       (s.map(_._1), s.map(_._2))
     }
 
-  /** Invert bucket → probing-query lists into per-query ascending bucket
-    * lists for the partition scans.
+  /** Probe selection on the driver (the descent analogue,
+    * [[Ivf.probeAssignments]] under [[Ivf.searchBatchedFast]]'s metric
+    * contract), inverted to per-query ascending bucket lists for the
+    * partition scans.
     */
-  private def invertProbes(
-      bucketQs: Array[Array[Int]], nq: Int): Array[Array[Int]] = {
-    val bufs = Array.fill(nq)(new scala.collection.mutable.ArrayBuilder.ofInt)
+  private def probedBuckets(
+      cents: Array[Array[Float]],
+      metric: String,
+      qvecs: Array[Array[Float]],
+      nProbe: Int): Array[Array[Int]] = {
+    val bucketQs = Ivf.probeAssignments(cents, Ivf.bucketAdj(cents, metric),
+      l2 = metric == "l2", qvecs, nProbe)
+    val bufs = Array.fill(qvecs.length)(
+      new scala.collection.mutable.ArrayBuilder.ofInt)
     var b = 0
     while (b < bucketQs.length) {
       val qsb = bucketQs(b)
@@ -1911,14 +1708,10 @@ object ServingFusion {
 
   /** Per-partition pool partial for [[mmrTopKCombined]]: a pool-bounded
     * (distance, id) top-k per query — [[Ivf.TopK]]'s insertion and tie
-    * rules exactly — whose entries CARRY the candidate vector, copied
-    * from the block at accepted inserts only. Doc-major partitions are
-    * disjoint, so the merge is a plain bounded union.
-    */
-  /** Payload slots are `AnyRef` so the f32 path (`Array[Float]` vectors)
-    * and the int8 path (`Array[Byte]` codes, 4× less pool network) share
-    * one partial — the shared-merge discipline that keeps twins from
-    * drifting.
+    * rules exactly — whose entries CARRY the candidate's pool payload
+    * ([[VecCodec.poolRow]]: f32 vectors or int8 codes, hence `AnyRef`
+    * slots), copied from the block at accepted inserts only. Doc-major
+    * partitions are disjoint, so the merge is a plain bounded union.
     */
   private final class VecPoolPartial(nq: Int, pool: Int)
       extends Serializable {
@@ -1984,102 +1777,15 @@ object ServingFusion {
       lam: Double,
       oneMinusLam: Double,
       metric: String = "cosine",
-      tombstones: Array[Long] = Array.emptyLongArray): Array[(Long, Long, Long, Double)] = {
-    require(pool > 0 && pool <= Mmr.MaxPoolPerQuery,
-      s"pool=$pool outside (0, ${Mmr.MaxPoolPerQuery}]")
-    val tomb = sortedTombstones(tombstones)
-    val l2 = metric == "l2"
-    val qs = queries.sortBy(_._1).toArray
-    require(qs.map(_._1).distinct.length == qs.length,
-      "mmrTopKCombined: duplicate qids in the batch")
-    val nq = qs.length
-    if (nq == 0) return Array.empty
-    val qids = qs.map(_._1)
-    val qvecs = qs.map(_._2)
-    val adj = Ivf.bucketAdj(cents, metric)
-    val qsq: Array[Double] =
-      if (l2) qvecs.map { qv =>
-        var s = 0.0; var j = 0
-        while (j < qv.length) { s += qv(j).toDouble * qv(j); j += 1 }
-        s
-      } else null
-    val probedByQ = invertProbes(
-      Ivf.probeAssignments(cents, adj, l2 = l2, qvecs, nProbe), nq)
-    val bc = combined.sparkContext.broadcast((qvecs, probedByQ, qsq, tomb))
-    val partials = combined.mapPartitions { it =>
-      val (qvs, probed, qsqB, tombB) = bc.value
-      val p = new VecPoolPartial(qvs.length, pool)
-      it.foreach { csh =>
-        var qi = 0
-        while (qi < qvs.length) {
-          val qv = qvs(qi)
-          val pb = probed(qi)
-          var bi = 0
-          while (bi < pb.length) {
-            val blk = csh.bucketBlock.getOrElse(pb(bi).toLong, -1)
-            if (blk >= 0) {
-              var r = csh.bOff(blk)
-              val end = csh.bOff(blk + 1)
-              while (r < end) {
-                val id = csh.text.ids(csh.vecLocal(r))
-                if (tombB.length == 0 ||
-                    java.util.Arrays.binarySearch(tombB, id) < 0) {
-                  var dot = 0f
-                  var j = 0
-                  val off = r * csh.dim
-                  while (j < csh.dim) { dot += csh.flat(off + j) * qv(j); j += 1 }
-                  val dist =
-                    if (qsqB != null)
-                      csh.rowSq(r).toDouble - 2.0d * dot + qsqB(qi)
-                    else 1.0d - dot
-                  val s = p.slotFor(qi, dist, id)
-                  if (s >= 0) p.pv(qi)(s) =
-                    java.util.Arrays.copyOfRange(csh.flat, off, off + csh.dim)
-                }
-                r += 1
-              }
-            }
-            bi += 1
-          }
-          qi += 1
-        }
-      }
-      Iterator.single(p)
-    }
-    val merged = Ivf.reducePartials(partials, new VecPoolPartial(nq, pool),
-      (a: VecPoolPartial, b: VecPoolPartial) => a.merge(b))
-    bc.destroy()
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    var qi = 0
-    while (qi < nq) {
-      val hd = merged.pd(qi)
-      var n = 0
-      while (n < hd.length && hd(n) < Double.MaxValue) n += 1
-      val ids = java.util.Arrays.copyOf(merged.pid(qi), n)
-      val rel = new Array[Double](n)
-      var i = 0
-      while (i < n) { rel(i) = 1.0 - hd(i); i += 1 }
-      val vecs = Array.tabulate(n)(i =>
-        merged.pv(qi)(i).asInstanceOf[Array[Float]])
-      Mmr.selectLocal(ids, rel, vecs, k, lam, oneMinusLam).foreach {
-        case (rank, id, score) => out += ((qids(qi), rank, id, score))
-      }
-      qi += 1
-    }
-    out.toArray
-  }
+      tombstones: Array[Long] = Array.emptyLongArray): Array[(Long, Long, Long, Double)] =
+    mmrTopKCombinedOf(F32Codec, combined, cents, queries, k, pool, nProbe,
+      lam, oneMinusLam, metric, tombstones)
 
-  /** [[mmrTopKCombined]]'s compressed twin (VERDICT r15 stretch #7): the
-    * pool retrieval scans the int8 combined shard with
-    * [[fusedTopKCombinedInt8]]'s exact distance kernel, and the pool
-    * partials carry the candidates' int8 CODES — 4× less pool network
-    * than the f32 path's vectors (pool×dim bytes vs floats per query).
-    * The greedy chain then runs [[Mmr.selectLocal]] over the codes mapped
-    * to floats: cosine is scale-invariant, so similarity over raw code
-    * values IS the int8-domain cosine (the `absMax/127` dequantization
-    * factor cancels in `dot/(‖a‖·‖b‖)`) — no dequantized copy is ever
-    * materialized. rel = 1 − int8 distance, same λ-blend, same (score,
-    * id) tie-breaks. Cosine-only, like the int8 serving family.
+  /** [[mmrTopKCombined]] over the COMPRESSED layout (VERDICT r15 stretch
+    * #7): the pool retrieval scans with [[fusedTopKCombinedInt8]]'s exact
+    * distance kernel, the pool carries int8 codes, and the greedy chain
+    * runs over them mapped to floats ([[Int8Codec]]'s pool payload) —
+    * rel = 1 − int8 distance, same λ-blend, same (score, id) tie-breaks.
     */
   def mmrTopKCombinedInt8(
       combined: org.apache.spark.rdd.RDD[CombinedShardInt8],
@@ -2091,30 +1797,42 @@ object ServingFusion {
       nProbe: Int,
       lam: Double,
       oneMinusLam: Double,
-      tombstones: Array[Long] = Array.emptyLongArray): Array[(Long, Long, Long, Double)] = {
+      tombstones: Array[Long] = Array.emptyLongArray): Array[(Long, Long, Long, Double)] =
+    mmrTopKCombinedOf(Int8Codec(absMax), combined, cents, queries, k, pool,
+      nProbe, lam, oneMinusLam, "cosine", tombstones)
+
+  /** [[mmrTopKCombined]] for either codec. */
+  private def mmrTopKCombinedOf[B, R, Q](
+      codec: VecCodec[B, R, Q],
+      combined: org.apache.spark.rdd.RDD[CombinedShardOf[B]],
+      cents: Array[Array[Float]],
+      queries: Seq[(Long, Array[Float])],
+      k: Int,
+      pool: Int,
+      nProbe: Int,
+      lam: Double,
+      oneMinusLam: Double,
+      metric: String,
+      tombstones: Array[Long]): Array[(Long, Long, Long, Double)] = {
     require(pool > 0 && pool <= Mmr.MaxPoolPerQuery,
       s"pool=$pool outside (0, ${Mmr.MaxPoolPerQuery}]")
     val tomb = sortedTombstones(tombstones)
     val qs = queries.sortBy(_._1).toArray
     require(qs.map(_._1).distinct.length == qs.length,
-      "mmrTopKCombinedInt8: duplicate qids in the batch")
+      "mmrTopKCombined: duplicate qids in the batch")
     val nq = qs.length
     if (nq == 0) return Array.empty
     val qids = qs.map(_._1)
     val qvecs = qs.map(_._2)
-    val qcodes = qvecs.map(Ivf.quantizeArray(_, absMax))
-    val qnorms = qcodes.map(Ivf.int8Norm)
-    val probedByQ = invertProbes(Ivf.probeAssignments(cents,
-      Ivf.bucketAdj(cents, "cosine"), l2 = false, qvecs, nProbe), nq)
-    val bc = combined.sparkContext.broadcast((qcodes, qnorms, probedByQ, tomb))
+    val bc = combined.sparkContext.broadcast((codec.prepare(qvecs, metric),
+      probedBuckets(cents, metric, qvecs, nProbe), tomb))
     val partials = combined.mapPartitions { it =>
-      val (qcs, qns, probed, tombB) = bc.value
-      val p = new VecPoolPartial(qcs.length, pool)
+      val (prepared, probed, tombB) = bc.value
+      val p = new VecPoolPartial(prepared.length, pool)
       it.foreach { csh =>
         var qi = 0
-        while (qi < qcs.length) {
-          val qc = qcs(qi)
-          val qn = qns(qi).toDouble
+        while (qi < prepared.length) {
+          val q = prepared(qi)
           val pb = probed(qi)
           var bi = 0
           while (bi < pb.length) {
@@ -2126,24 +1844,8 @@ object ServingFusion {
                 val id = csh.text.ids(csh.vecLocal(r))
                 if (tombB.length == 0 ||
                     java.util.Arrays.binarySearch(tombB, id) < 0) {
-                  var dot = 0
-                  var j = 0
-                  val off = r * csh.dim
-                  while (j < csh.dim) {
-                    dot += csh.codes(off + j).toInt * qc(j).toInt; j += 1
-                  }
-                  val norm = csh.norms(r)
-                  val dist =
-                    if (norm == 0f || qn == 0.0) 1.0
-                    else {
-                      var sim = dot.toDouble / (norm.toDouble * qn)
-                      if (sim > 1.0) sim = 1.0
-                      if (sim < -1.0) sim = -1.0
-                      1.0 - sim
-                    }
-                  val s = p.slotFor(qi, dist, id)
-                  if (s >= 0) p.pv(qi)(s) =
-                    java.util.Arrays.copyOfRange(csh.codes, off, off + csh.dim)
+                  val s = p.slotFor(qi, codec.dist(csh.vecs, r, q), id)
+                  if (s >= 0) p.pv(qi)(s) = codec.poolRow(csh.vecs, r)
                 }
                 r += 1
               }
@@ -2168,13 +1870,7 @@ object ServingFusion {
       val rel = new Array[Double](n)
       var i = 0
       while (i < n) { rel(i) = 1.0 - hd(i); i += 1 }
-      val vecs = Array.tabulate(n) { i =>
-        val c = merged.pv(qi)(i).asInstanceOf[Array[Byte]]
-        val f = new Array[Float](c.length)
-        var j = 0
-        while (j < c.length) { f(j) = c(j).toFloat; j += 1 }
-        f
-      }
+      val vecs = Array.tabulate(n)(i => codec.poolVec(merged.pv(qi)(i)))
       Mmr.selectLocal(ids, rel, vecs, k, lam, oneMinusLam).foreach {
         case (rank, id, score) => out += ((qids(qi), rank, id, score))
       }

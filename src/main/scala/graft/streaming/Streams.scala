@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
+import graft.search.ServingFusion
 
 /** Streaming / reactivity surface (SURVEY §2.10, E1-E4).
   *
@@ -592,6 +593,58 @@ object Streams {
       idWatermark: Option[Long] = None,
       compactionThreshold: Int = 0,
       onCompactionNeeded: () => Unit = () => ())
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamBatches(docs, ref, checkpoint, baseBuildId, idWatermark,
+      compactionThreshold, onCompactionNeeded) { (batch, batchId, wm) =>
+      ingestCombinedBatch(batch, batchId, idCol, textCol, vecCol, cents,
+        frozenStats, frozenTokenDf, ref, numShardsPerSegment, segmentLog, wm)
+    }
+
+  /** [[combinedIngest]] into the int8 combined serving index, with each
+    * batch quantized against the base build's frozen `absMax`.
+    */
+  def combinedIngestInt8(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      vecCol: String,
+      cents: Array[Array[Float]],
+      absMax: Double,
+      frozenStats: (Long, Double),
+      frozenTokenDf: DataFrame,
+      ref: java.util.concurrent.atomic.AtomicReference[
+        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8]],
+      checkpoint: String,
+      numShardsPerSegment: Int = 1,
+      segmentLog: Option[String] = None,
+      baseBuildId: Option[String] = None,
+      idWatermark: Option[Long] = None,
+      compactionThreshold: Int = 0,
+      onCompactionNeeded: () => Unit = () => ())
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamBatches(docs, ref, checkpoint, baseBuildId, idWatermark,
+      compactionThreshold, onCompactionNeeded) { (batch, batchId, wm) =>
+      ingestCombinedBatchInt8(batch, batchId, idCol, textCol, vecCol, cents,
+        absMax, frozenStats, frozenTokenDf, ref, numShardsPerSegment,
+        segmentLog, wm)
+    }
+
+  /** The streaming side of [[combinedIngest]] and [[upsertIngest]], for
+    * either layout: the checkpoint binding, the id watermark shared across
+    * batches, `perBatch` per micro-batch, and the segment-count compaction
+    * hook.
+    */
+  private def streamBatches[S](
+      docs: DataFrame,
+      ref: java.util.concurrent.atomic.AtomicReference[
+        org.apache.spark.rdd.RDD[S]],
+      checkpoint: String,
+      baseBuildId: Option[String],
+      idWatermark: Option[Long],
+      compactionThreshold: Int,
+      onCompactionNeeded: () => Unit)(
+      perBatch: (DataFrame, Long,
+        Option[java.util.concurrent.atomic.AtomicLong]) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     baseBuildId.foreach(id => bindCheckpointToBase(
       docs.sparkSession, checkpoint, id))
@@ -600,9 +653,7 @@ object Streams {
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val before = ref.get()
-        ingestCombinedBatch(batch, batchId, idCol, textCol, vecCol, cents,
-          frozenStats, frozenTokenDf, ref, numShardsPerSegment, segmentLog,
-          wm)
+        perBatch(batch, batchId, wm)
         if ((ref.get() ne before) && compactionThreshold > 0 &&
             segCount.incrementAndGet() % compactionThreshold == 0)
           onCompactionNeeded()
@@ -636,22 +687,13 @@ object Streams {
       replacesCol: Option[String] = None)
       : Unit =
     ingestSegmentBatch(batch, batchId, idCol, textCol, vecCol, segmentLog,
-      idWatermark, ref, replacesCol) { b =>
-      val (ids, post, assigned) = segmentFrames(b, idCol, textCol, vecCol,
-        cents)
-      graft.search.ServingFusion.buildCombined(
-        ids, post, idCol, assigned, dec = None,
-        numShards = numShardsPerSegment,
-        prebuiltTokenDf = Some(frozenTokenDf),
-        frozenStats = Some(frozenStats))
-    }
+      idWatermark, ref, replacesCol)(segmentOf(ServingFusion.F32Codec, idCol,
+      textCol, vecCol, cents, frozenStats, frozenTokenDf,
+      numShardsPerSegment))
 
-  /** [[ingestCombinedBatch]]'s compressed twin: the segment quantizes
+  /** [[ingestCombinedBatch]] into the int8 layout: the segment quantizes
     * against the base build's frozen `absMax`
-    * ([[graft.search.ServingFusion.appendCombinedInt8]]'s contract) —
-    * int8 combined serving has the SAME streaming story as f32 (same
-    * batchId-keyed log, same exactly-once discipline, same watermark
-    * guard; one shared core, [[ingestSegmentBatch]]).
+    * ([[graft.search.ServingFusion.appendCombinedInt8]]'s contract).
     */
   def ingestCombinedBatchInt8(
       batch: DataFrame,
@@ -671,15 +713,9 @@ object Streams {
       replacesCol: Option[String] = None)
       : Unit =
     ingestSegmentBatch(batch, batchId, idCol, textCol, vecCol, segmentLog,
-      idWatermark, ref, replacesCol) { b =>
-      val (ids, post, assigned) = segmentFrames(b, idCol, textCol, vecCol,
-        cents)
-      graft.search.ServingFusion.buildCombinedInt8(
-        ids, post, idCol, assigned, absMax, dec = None,
-        numShards = numShardsPerSegment,
-        prebuiltTokenDf = Some(frozenTokenDf),
-        frozenStats = Some(frozenStats))
-    }
+      idWatermark, ref, replacesCol)(segmentOf(ServingFusion.Int8Codec(absMax),
+      idCol, textCol, vecCol, cents, frozenStats, frozenTokenDf,
+      numShardsPerSegment))
 
   /** The one copy of the micro-batch exactly-once discipline, shared by
     * both combined layouts: re-delivery detection (a COMPLETE
@@ -792,127 +828,29 @@ object Streams {
     }
   }
 
-  /** A micro-batch's (ids, postings, IVF assignment) — the three frames
-    * every combined segment build starts from.
+  /** A micro-batch's combined SEGMENT — postings plus the IVF assignment
+    * against the frozen centroids, built with the codec under the base
+    * build's frozen token-df artifact and corpus scalars. The one segment
+    * build that ingest, upsert and restart recovery share.
     */
-  private def segmentFrames(b: DataFrame, idCol: String, textCol: String,
-      vecCol: String, cents: Array[Array[Float]])
-      : (DataFrame, DataFrame, DataFrame) = {
-    val ids = b.select(col(idCol))
-    val post = graft.text.Bm25.postings(b, idCol, textCol)
+  private def segmentOf[B, R, Q](
+      codec: ServingFusion.VecCodec[B, R, Q],
+      idCol: String,
+      textCol: String,
+      vecCol: String,
+      cents: Array[Array[Float]],
+      frozenStats: (Long, Double),
+      frozenTokenDf: DataFrame,
+      numShards: Int)(
+      b: DataFrame): org.apache.spark.rdd.RDD[ServingFusion.CombinedShardOf[B]] = {
     val assigned = graft.search.Ivf.assignFast(
       b.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<float>").as("vector")), cents)
       .select(col("id").as(idCol), col("vector"), col("bucket"))
-    (ids, post, assigned)
-  }
-
-  /** [[combinedIngest]]'s compressed twin — streaming micro-batch ingest
-    * into the int8 combined serving index, same checkpoint binding, same
-    * durable-log and compaction-trigger contracts, with the batch
-    * quantized against the base build's frozen `absMax`.
-    */
-  def combinedIngestInt8(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      vecCol: String,
-      cents: Array[Array[Float]],
-      absMax: Double,
-      frozenStats: (Long, Double),
-      frozenTokenDf: DataFrame,
-      ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8]],
-      checkpoint: String,
-      numShardsPerSegment: Int = 1,
-      segmentLog: Option[String] = None,
-      baseBuildId: Option[String] = None,
-      idWatermark: Option[Long] = None,
-      compactionThreshold: Int = 0,
-      onCompactionNeeded: () => Unit = () => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    baseBuildId.foreach(id => bindCheckpointToBase(
-      docs.sparkSession, checkpoint, id))
-    val wm = idWatermark.map(w => new java.util.concurrent.atomic.AtomicLong(w))
-    val segCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val before = ref.get()
-        ingestCombinedBatchInt8(batch, batchId, idCol, textCol, vecCol,
-          cents, absMax, frozenStats, frozenTokenDf, ref,
-          numShardsPerSegment, segmentLog, wm)
-        if ((ref.get() ne before) && compactionThreshold > 0 &&
-            segCount.incrementAndGet() % compactionThreshold == 0)
-          onCompactionNeeded()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
-
-  /** [[recoverCombinedSegments]]' compressed twin: rebuild the log's docs
-    * as one int8 segment under the SAME frozen artifacts (absMax
-    * included) and union it onto the fresh base; `minIdExclusive` filters
-    * batches a snapshot superseded, and `tombRef` folds the log's
-    * superseded upsert ids back into the tombstone set, exactly as for
-    * f32.
-    */
-  def recoverCombinedSegmentsInt8(
-      spark: SparkSession,
-      segmentLog: String,
-      idCol: String,
-      textCol: String,
-      vecCol: String,
-      cents: Array[Array[Float]],
-      absMax: Double,
-      frozenStats: (Long, Double),
-      frozenTokenDf: DataFrame,
-      base: org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8],
-      numShards: Int = 1,
-      minIdExclusive: Option[Long] = None,
-      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]]
-        = None)
-      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8] = {
-    val loggedOpt = loggedAboveWatermark(spark, segmentLog, idCol,
-      minIdExclusive)
-    if (loggedOpt.isEmpty) return base
-    val logged = loggedOpt.get
-    foldLoggedReplaces(logged, tombRef)
-    if (logged.isEmpty) return base
-    val (ids, post, assigned) = segmentFrames(logged, idCol, textCol,
-      vecCol, cents)
-    val seg = graft.search.ServingFusion.buildCombinedInt8(
-      ids, post, idCol, assigned, absMax, dec = None, numShards = numShards,
-      prebuiltTokenDf = Some(frozenTokenDf),
-      frozenStats = Some(frozenStats)).cache()
-    seg.count()
-    base.union(seg)
-  }
-
-  /** [[compactCombinedServing]]'s compressed twin — same snapshot → fold
-    * → swap → keyed-clear discipline over the int8 kernels.
-    */
-  def compactCombinedServingInt8(
-      ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8]],
-      tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
-      ovRef: java.util.concurrent.atomic.AtomicReference[Map[Long, (Double, Long)]],
-      numPartitions: Int)
-      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8] = {
-    val tomb = tombRef.get()
-    val ov = ovRef.get()
-    val old = ref.get()
-    val compacted = graft.search.ServingFusion.compactCombinedInt8(
-      old, tomb, overridesArray(ov), numPartitions).cache()
-    compacted.count() // materialize BEFORE the swap
-    ref.updateAndGet(cur => rebaseUnion(cur, old, compacted))
-    val tombSnap = tomb.toSet
-    tombRef.updateAndGet(cur => cur.filterNot(tombSnap))
-    ovRef.updateAndGet(cur => cur.filterNot { case (id, fv) =>
-      ov.get(id).contains(fv)
-    })
-    compacted
+    ServingFusion.buildCombinedOf(codec, b.select(col(idCol)),
+      graft.text.Bm25.postings(b, idCol, textCol), idCol, assigned,
+      dec = None, numShards = numShards, prebuiltDocLengths = None,
+      prebuiltTokenDf = Some(frozenTokenDf), frozenStats = Some(frozenStats))
   }
 
   /** Streaming DELETE ingest for combined serving (VERDICT r16 #2): each
@@ -964,7 +902,7 @@ object Streams {
     // Hook arming (r19, ADVICE r18): the old crossing test
     // (`before < threshold && merged >= threshold`) never fired when the
     // set entered the over-threshold state through another path — the
-    // upsert stream's mergeTombstones or recovery's foldLoggedReplaces —
+    // upsert stream's mergeTombstones or restart recovery's replaces fold —
     // leaving only the hard cap's batch failure. The armed flag fires
     // once whenever a merge lands at/above the threshold and re-arms when
     // the set drops below it (compaction clears the set).
@@ -1000,8 +938,8 @@ object Streams {
     * (serving consults a single array), so a get-then-set merge would
     * lose whichever write raced — `updateAndGet` retries the pure merge
     * under CAS instead.
-    */
-  /** @param cap fail the merge (no mutation committed) when the EXACT
+    *
+    * @param cap fail the merge (no mutation committed) when the EXACT
     *   union size would exceed it — an idempotent re-delivery of already-
     *   merged ids never trips it. 0 = uncapped.
     */
@@ -1147,21 +1085,13 @@ object Streams {
       segmentLog: Option[String] = None,
       baseBuildId: Option[String] = None,
       idWatermark: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    baseBuildId.foreach(id => bindCheckpointToBase(
-      docs.sparkSession, checkpoint, id))
-    val wm = idWatermark.map(w => new java.util.concurrent.atomic.AtomicLong(w))
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertCombinedBatch(batch, batchId, idCol, replacesCol, textCol,
-          vecCol, cents, frozenStats, frozenTokenDf, ref, tombRef,
-          numShardsPerSegment, segmentLog, wm)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamBatches(docs, ref, checkpoint, baseBuildId, idWatermark,
+      compactionThreshold = 0, () => ()) { (batch, batchId, wm) =>
+      upsertCombinedBatch(batch, batchId, idCol, replacesCol, textCol,
+        vecCol, cents, frozenStats, frozenTokenDf, ref, tombRef,
+        numShardsPerSegment, segmentLog, wm)
+    }
 
   /** One [[upsertIngest]] micro-batch, factored out like
     * [[ingestCombinedBatch]] so the spec can re-deliver it. Tombstones
@@ -1183,27 +1113,14 @@ object Streams {
       numShardsPerSegment: Int = 1,
       segmentLog: Option[String] = None,
       idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None)
-      : Unit = {
-    val b = batch.persist()
-    try {
-      val replaced = b.filter(col(replacesCol).isNotNull)
-        .select(col(replacesCol).cast("long")).distinct()
-        .collect().map(_.getLong(0))
-      if (replaced.nonEmpty) mergeTombstones(tombRef, replaced)
-      // `replacesCol` rides into the segment log (VERDICT r17 missing
-      // #1), making the upsert's delete half durable with its add half:
-      // restart recovery folds the logged superseded ids back into the
-      // tombstone set, with no caller-side oplog replay required.
-      ingestCombinedBatch(b, batchId, idCol, textCol,
-        vecCol, cents, frozenStats, frozenTokenDf, ref,
-        numShardsPerSegment, segmentLog, idWatermark,
-        replacesCol = Some(replacesCol))
-    } finally b.unpersist()
-  }
+      : Unit =
+    upsertBatchOf(batch, batchId, idCol, replacesCol, textCol, vecCol, ref,
+      tombRef, segmentLog, idWatermark)(segmentOf(ServingFusion.F32Codec,
+      idCol, textCol, vecCol, cents, frozenStats, frozenTokenDf,
+      numShardsPerSegment))
 
-  /** [[upsertCombinedBatch]]'s compressed twin (ADVICE r17 — int8 parity
-    * at the upsert seam): tombstones first, then the int8 segment under
-    * the frozen `absMax`; same durable `graft_replaces` logging.
+  /** [[upsertCombinedBatch]] into the int8 layout (ADVICE r17 — int8 parity
+    * at the upsert seam): the segment quantizes under the frozen `absMax`.
     */
   def upsertCombinedBatchInt8(
       batch: DataFrame,
@@ -1222,56 +1139,41 @@ object Streams {
       numShardsPerSegment: Int = 1,
       segmentLog: Option[String] = None,
       idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None)
-      : Unit = {
+      : Unit =
+    upsertBatchOf(batch, batchId, idCol, replacesCol, textCol, vecCol, ref,
+      tombRef, segmentLog, idWatermark)(segmentOf(
+      ServingFusion.Int8Codec(absMax), idCol, textCol, vecCol, cents,
+      frozenStats, frozenTokenDf, numShardsPerSegment))
+
+  /** [[upsertCombinedBatch]] for either layout, `segment` building the
+    * batch's docs.
+    */
+  private def upsertBatchOf[S](
+      batch: DataFrame,
+      batchId: Long,
+      idCol: String,
+      replacesCol: String,
+      textCol: String,
+      vecCol: String,
+      ref: java.util.concurrent.atomic.AtomicReference[
+        org.apache.spark.rdd.RDD[S]],
+      tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
+      segmentLog: Option[String],
+      idWatermark: Option[java.util.concurrent.atomic.AtomicLong])(
+      segment: DataFrame => org.apache.spark.rdd.RDD[S]): Unit = {
     val b = batch.persist()
     try {
       val replaced = b.filter(col(replacesCol).isNotNull)
         .select(col(replacesCol).cast("long")).distinct()
         .collect().map(_.getLong(0))
       if (replaced.nonEmpty) mergeTombstones(tombRef, replaced)
-      ingestCombinedBatchInt8(b, batchId, idCol, textCol,
-        vecCol, cents, absMax, frozenStats, frozenTokenDf, ref,
-        numShardsPerSegment, segmentLog, idWatermark,
-        replacesCol = Some(replacesCol))
+      // `replacesCol` rides into the segment log (VERDICT r17 missing
+      // #1), making the upsert's delete half durable with its add half:
+      // restart recovery folds the logged superseded ids back into the
+      // tombstone set, with no caller-side oplog replay required.
+      ingestSegmentBatch(b, batchId, idCol, textCol, vecCol, segmentLog,
+        idWatermark, ref, replacesCol = Some(replacesCol))(segment)
     } finally b.unpersist()
-  }
-
-  /** [[upsertIngest]]'s compressed twin — the int8 combined layout's
-    * live update flow, same delete-visible-before-add ordering and
-    * exactly-once discipline through the shared core.
-    */
-  def upsertIngestInt8(
-      docs: DataFrame,
-      idCol: String,
-      replacesCol: String,
-      textCol: String,
-      vecCol: String,
-      cents: Array[Array[Float]],
-      absMax: Double,
-      frozenStats: (Long, Double),
-      frozenTokenDf: DataFrame,
-      ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8]],
-      tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
-      checkpoint: String,
-      numShardsPerSegment: Int = 1,
-      segmentLog: Option[String] = None,
-      baseBuildId: Option[String] = None,
-      idWatermark: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    baseBuildId.foreach(id => bindCheckpointToBase(
-      docs.sparkSession, checkpoint, id))
-    val wm = idWatermark.map(w => new java.util.concurrent.atomic.AtomicLong(w))
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertCombinedBatchInt8(batch, batchId, idCol, replacesCol, textCol,
-          vecCol, cents, absMax, frozenStats, frozenTokenDf, ref, tombRef,
-          numShardsPerSegment, segmentLog, wm)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
   }
 
   /** COMPACT the live combined serving state (the operation every live
@@ -1293,12 +1195,36 @@ object Streams {
       tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
       ovRef: java.util.concurrent.atomic.AtomicReference[Map[Long, (Double, Long)]],
       numPartitions: Int)
-      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard] = {
+      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard] =
+    compactServingOf(ref, tombRef, ovRef)(
+      ServingFusion.compactCombined(_, _, _, numPartitions))
+
+  /** [[compactCombinedServing]] over the int8 compaction kernel. */
+  def compactCombinedServingInt8(
+      ref: java.util.concurrent.atomic.AtomicReference[
+        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8]],
+      tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
+      ovRef: java.util.concurrent.atomic.AtomicReference[Map[Long, (Double, Long)]],
+      numPartitions: Int)
+      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8] =
+    compactServingOf(ref, tombRef, ovRef)(
+      ServingFusion.compactCombinedInt8(_, _, _, numPartitions))
+
+  /** [[compactCombinedServing]] for either layout: snapshot, `compact`
+    * (index, tombstones, overrides), materialize, swap, keyed clear.
+    */
+  private def compactServingOf[S](
+      ref: java.util.concurrent.atomic.AtomicReference[
+        org.apache.spark.rdd.RDD[S]],
+      tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
+      ovRef: java.util.concurrent.atomic.AtomicReference[Map[Long, (Double, Long)]])(
+      compact: (org.apache.spark.rdd.RDD[S], Array[Long],
+        Array[(Long, Double)]) => org.apache.spark.rdd.RDD[S])
+      : org.apache.spark.rdd.RDD[S] = {
     val tomb = tombRef.get()
     val ov = ovRef.get()
     val old = ref.get()
-    val compacted = graft.search.ServingFusion.compactCombined(
-      old, tomb, overridesArray(ov), numPartitions).cache()
+    val compacted = compact(old, tomb, overridesArray(ov)).cache()
     compacted.count() // materialize BEFORE the swap
     // Rebase, don't blindly set: ingest may have appended segments while
     // the compact+materialize ran (the hook schedules compaction OFF the
@@ -1364,17 +1290,12 @@ object Streams {
       frozenStats: (Long, Double),
       tokenDf: DataFrame,
       idCol: String,
-      segmentLog: Option[String] = None): Int = {
-    val savedMaxId = graft.search.ServingFusion.saveCombined(index, path,
-      frozenStats, tokenDf)
-    segmentLog.map(truncateSegmentLog(tokenDf.sparkSession, _, idCol,
-      savedMaxId)).getOrElse(0)
-  }
+      segmentLog: Option[String] = None): Int =
+    truncateSnapshotted(ServingFusion.saveCombined(index, path, frozenStats,
+      tokenDf), tokenDf.sparkSession, idCol, segmentLog)
 
-  /** [[snapshotCombined]]'s compressed twin (ADVICE r17 — int8 parity at
-    * the durability seam): persist the served int8 index (absMax rides
-    * the snapshot meta) and truncate the superseded log batches. Same
-    * two crash windows, same `maxId`-keyed recovery filter.
+  /** [[snapshotCombined]] for the int8 layout (ADVICE r17 — int8 parity at
+    * the durability seam): absMax rides the snapshot meta.
     */
   def snapshotCombinedInt8(
       index: org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8],
@@ -1383,12 +1304,15 @@ object Streams {
       frozenStats: (Long, Double),
       tokenDf: DataFrame,
       idCol: String,
-      segmentLog: Option[String] = None): Int = {
-    val savedMaxId = graft.search.ServingFusion.saveCombinedInt8(index, path,
-      absMax, frozenStats, tokenDf)
-    segmentLog.map(truncateSegmentLog(tokenDf.sparkSession, _, idCol,
-      savedMaxId)).getOrElse(0)
-  }
+      segmentLog: Option[String] = None): Int =
+    truncateSnapshotted(ServingFusion.saveCombinedInt8(index, path, absMax,
+      frozenStats, tokenDf), tokenDf.sparkSession, idCol, segmentLog)
+
+  /** [[snapshotCombined]]'s second step, after `savedMaxId` was saved. */
+  private def truncateSnapshotted(savedMaxId: Long, spark: SparkSession,
+      idCol: String, segmentLog: Option[String]): Int =
+    segmentLog.map(truncateSegmentLog(spark, _, idCol, savedMaxId))
+      .getOrElse(0)
 
   /** Drop the segment log's COMPLETE batch directories whose docs the
     * snapshot carries — every id in the batch at or below `upToId`, the
@@ -1424,7 +1348,7 @@ object Streams {
     // dir), matching the directory side's lastIndexOf parse — anchoring
     // on the first match mis-bucketed every file when the log ROOT path
     // itself contained a `batch=<n>` component (ADVICE r18). mergeSchema
-    // mirrors loggedAboveWatermark: the same mixed-schema logs flow
+    // mirrors restart recovery's read: the same mixed-schema logs flow
     // through both readers (only idCol is read today; the symmetry keeps
     // a wider future read safe).
     val maxByBatch = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
@@ -1521,74 +1445,90 @@ object Streams {
       tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]]
         = None,
       maxReplaces: Int = 0)
-      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard] = {
-    val loggedOpt = loggedAboveWatermark(spark, segmentLog, idCol,
-      minIdExclusive)
-    if (loggedOpt.isEmpty) return base
-    val logged = loggedOpt.get
-    foldLoggedReplaces(logged, tombRef, maxReplaces)
-    if (logged.isEmpty) return base
-    val (ids, post, assigned) = segmentFrames(logged, idCol, textCol,
-      vecCol, cents)
-    val seg = graft.search.ServingFusion.buildCombined(
-      ids, post, idCol, assigned, dec = None, numShards = numShards,
-      prebuiltTokenDf = Some(frozenTokenDf),
-      frozenStats = Some(frozenStats)).cache()
-    seg.count()
-    base.union(seg)
-  }
+      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard] =
+    recoverSegmentsOf(spark, segmentLog, idCol, base, minIdExclusive, tombRef,
+      maxReplaces)(segmentOf(ServingFusion.F32Codec, idCol, textCol, vecCol,
+      cents, frozenStats, frozenTokenDf, numShards))
 
-  /** The segment log's complete batches above the snapshot watermark —
-    * `minIdExclusive` is the base SNAPSHOT's id watermark
-    * (`LoadedCombined.maxId`): log docs at or below it are already IN
-    * the base, i.e. the log batches a [[snapshotCombined]] superseded
-    * but a crash before the truncate left behind. Filtering here (ids
-    * are monotone by the append-only contract) makes
-    * snapshot-then-truncate crash-safe: recovery over a stale log never
-    * double-serves a snapshotted doc. None = no complete batches at all.
+  /** [[recoverCombinedSegments]] for the int8 layout: the log's docs
+    * rebuilt as one int8 segment under the SAME frozen `absMax`.
     */
-  private def loggedAboveWatermark(spark: SparkSession, segmentLog: String,
-      idCol: String, minIdExclusive: Option[Long]): Option[DataFrame] = {
+  def recoverCombinedSegmentsInt8(
+      spark: SparkSession,
+      segmentLog: String,
+      idCol: String,
+      textCol: String,
+      vecCol: String,
+      cents: Array[Array[Float]],
+      absMax: Double,
+      frozenStats: (Long, Double),
+      frozenTokenDf: DataFrame,
+      base: org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8],
+      numShards: Int = 1,
+      minIdExclusive: Option[Long] = None,
+      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]]
+        = None,
+      maxReplaces: Int = 0)
+      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8] =
+    recoverSegmentsOf(spark, segmentLog, idCol, base, minIdExclusive, tombRef,
+      maxReplaces)(segmentOf(ServingFusion.Int8Codec(absMax), idCol, textCol,
+      vecCol, cents, frozenStats, frozenTokenDf, numShards))
+
+  /** [[recoverCombinedSegments]] for either layout, `segment` building the
+    * recovered docs.
+    */
+  private def recoverSegmentsOf[S](
+      spark: SparkSession,
+      segmentLog: String,
+      idCol: String,
+      base: org.apache.spark.rdd.RDD[S],
+      minIdExclusive: Option[Long],
+      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]],
+      maxReplaces: Int)(
+      segment: DataFrame => org.apache.spark.rdd.RDD[S])
+      : org.apache.spark.rdd.RDD[S] = {
     val dirs = completedLogBatches(spark, segmentLog)
-    if (dirs.isEmpty) return None
+    if (dirs.isEmpty) return base
     // mergeSchema: a log written before the `graft_replaces` column
     // existed may mix schemas with newer batches; merged footers keep
     // the union deterministic (the dir count is compaction-bounded).
     val loggedAll = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-    Some(minIdExclusive match {
-      case Some(wm) => loggedAll.filter(col(idCol).cast("long") > wm)
-      case None => loggedAll
-    })
-  }
-
-  /** Fold a recovered log's superseded ids (`graft_replaces`, logged by
-    * the upsert path) into the tombstone set — the restart half of
-    * [[upsertIngest]]'s delete-visible-before-add contract. Absent column
-    * (pre-upsert logs) = nothing to fold.
-    */
-  private def foldLoggedReplaces(logged: DataFrame,
-      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]],
-      cap: Int = 0): Unit =
-    tombRef.foreach { tr =>
-      if (logged.columns.contains("graft_replaces")) {
-        val repDf = logged.filter(col("graft_replaces").isNotNull)
-          .select(col("graft_replaces").cast("long")).distinct()
-        // Bounded recovery (r19, VERDICT r18 #4): a caller that never
-        // snapshots accumulates replaced ids without bound, and this
-        // collect would OOM the driver silently. Count first and fail
-        // loudly over the same cap the live delete path enforces.
-        if (cap > 0) {
-          val n = repDf.count()
-          require(n <= cap,
-            s"recovery would fold $n replaced ids into the tombstone set, " +
-              s"over the cap $cap — snapshot/compact the served index " +
-              "before restarting (snapshotCombined's compact-first " +
-              "contract applies the log's replaces and truncates it)")
-        }
-        val rep = repDf.collect().map(_.getLong(0))
-        if (rep.nonEmpty) { mergeTombstones(tr, rep, cap); () }
+    // `minIdExclusive` is the base SNAPSHOT's id watermark
+    // (`LoadedCombined.maxId`): log docs at or below it are already IN the
+    // base, i.e. the log batches a [[snapshotCombined]] superseded but a
+    // crash before the truncate left behind. Filtering here (ids are
+    // monotone by the append-only contract) makes snapshot-then-truncate
+    // crash-safe: recovery over a stale log never double-serves a
+    // snapshotted doc.
+    val logged = minIdExclusive.fold(loggedAll)(wm =>
+      loggedAll.filter(col(idCol).cast("long") > wm))
+    // Fold the log's superseded ids (`graft_replaces`, logged by the
+    // upsert path) into the tombstone set — the restart half of
+    // [[upsertIngest]]'s delete-visible-before-add contract. Absent column
+    // (pre-upsert logs) = nothing to fold.
+    for (tr <- tombRef if logged.columns.contains("graft_replaces")) {
+      val repDf = logged.filter(col("graft_replaces").isNotNull)
+        .select(col("graft_replaces").cast("long")).distinct()
+      // Bounded recovery (r19, VERDICT r18 #4): a caller that never
+      // snapshots accumulates replaced ids without bound, and this
+      // collect would OOM the driver silently. Count first and fail
+      // loudly over the same cap the live delete path enforces.
+      if (maxReplaces > 0) {
+        val n = repDf.count()
+        require(n <= maxReplaces,
+          s"recovery would fold $n replaced ids into the tombstone set, " +
+            s"over the cap $maxReplaces — snapshot/compact the served " +
+            "index before restarting (snapshotCombined's compact-first " +
+            "contract applies the log's replaces and truncates it)")
       }
+      val rep = repDf.collect().map(_.getLong(0))
+      if (rep.nonEmpty) mergeTombstones(tr, rep, maxReplaces)
     }
+    if (logged.isEmpty) return base
+    val seg = segment(logged).cache()
+    seg.count()
+    base.union(seg)
+  }
 
   /** The segment log's COMPLETE batch directories (`batch=<id>/` carrying
     * `_SUCCESS`), sorted by batch id — the readable unit of the durable

@@ -52,9 +52,11 @@ object Bm25 {
     docLengthsFromPostings(docs.select(col(idCol)),
       postings(docs, idCol, textCol, lang), idCol)
 
-  /** Score all documents matching `queryText`; returns (id, score) sorted
-    * descending (ties broken by id for determinism). Candidates = union of
-    * posting lists of the analyzed query tokens.
+  /** Score all documents matching `queryText`; returns (id, score).
+    * Candidates = union of posting lists of the analyzed query tokens. With
+    * a `limit`, the result is the top `limit` sorted by score descending
+    * (ties broken by id for determinism); unlimited (`Int.MaxValue`), it is
+    * the full hit set in no particular order.
     */
   def search(docs: DataFrame, idCol: String, textCol: String, queryText: String,
              lang: String = "english", limit: Int = Int.MaxValue): DataFrame =
@@ -67,6 +69,8 @@ object Bm25 {
 
   /** BM25 over pre-built postings — the deployment entry point (postings
     * materialized + bucketed by token; only this plan runs per query batch).
+    * Returns (id, score) with [[search]]'s order contract: sorted by score
+    * descending, ties by id, under a `limit`; unordered when unlimited.
     *
     * An empty analyzed query (e.g. all stopwords) returns a typed empty
     * (id, score) result — mirrors `FindIDsByTextSearch` returning nil so

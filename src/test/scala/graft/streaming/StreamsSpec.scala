@@ -1833,5 +1833,27 @@ class StreamsSpec extends SparkSpec {
       tombRef = Some(tombRef), maxReplaces = 3)
     assert(tombRef.get().toSeq === Seq(0L, 1L, 2L))
     assert(recovered.count() > 0)
+    // The int8 layout restarts through the same capped fold.
+    val base8 = ServingFusion.buildCombinedInt8(
+      baseDocs.select(col("doc_id")), post, "doc_id",
+      Ivf.assignFast(vecs(baseDocs), cents)
+        .select(col("id").as("doc_id"), col("vector"), col("bucket")),
+      absMax = 1.0, numShards = 1, prebuiltTokenDf = Some(tdf),
+      frozenStats = Some(frozen))
+    val tombRef8 = new java.util.concurrent.atomic.AtomicReference(
+      Array.emptyLongArray)
+    val ex8 = intercept[IllegalArgumentException] {
+      Streams.recoverCombinedSegmentsInt8(spark, log, "doc_id", "text",
+        "embedding", cents, absMax = 1.0, frozen, tdf, base8, numShards = 1,
+        tombRef = Some(tombRef8), maxReplaces = 2)
+    }
+    assert(ex8.getMessage.contains("cap"))
+    assert(tombRef8.get().isEmpty,
+      "a failed int8 recovery must not mutate the set")
+    val recovered8 = Streams.recoverCombinedSegmentsInt8(spark, log,
+      "doc_id", "text", "embedding", cents, absMax = 1.0, frozen, tdf, base8,
+      numShards = 1, tombRef = Some(tombRef8), maxReplaces = 3)
+    assert(tombRef8.get().toSeq === Seq(0L, 1L, 2L))
+    assert(recovered8.count() > 0)
   }
 }
